@@ -7,7 +7,8 @@ Spark-first shape, sized for a 100 TB corpus vs a small eval set:
 
   * n-grams are EXPLODED then hashed (explode → codegen'd ``xxhash64``
     over ``concat_ws(slice(tokens))`` — no interpreted higher-order
-    lambdas in the hot path, mirroring ``dedup.minhash_signatures``);
+    lambdas in the hot path, the same explode-first shape as
+    ``dedup._exploded_shingles``);
   * the shuffle carries ``(id, hash)`` longs, never text;
   * the eval side is tiny by construction (thousands of documents), so
     the collision join broadcasts it — the corpus side never shuffles;

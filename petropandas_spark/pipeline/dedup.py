@@ -4,13 +4,21 @@ extension; graded alongside SURVEY.md §2).
 Scale stance (100 TB):
   * exact dedup is a hash-groupBy — map-side combinable, one shuffle on the
     digest (never on the document body);
-  * MinHash/LSH banding turns all-pairs O(n²) into a self-join on band
-    keys — the shuffle key is (band_id, band_hash), so only same-bucket
+  * MinHash/LSH banding turns all-pairs O(n²) into a groupBy on band
+    keys — the shuffle key is the band hash, so only same-bucket
     candidates meet; signatures are fixed-width, documents stay columnar;
-  * SimHash is a single narrow Arrow-batched projection (64-bit signature),
-    near-dup = Hamming distance on two longs — `bit_count(a ^ b)`;
+  * SimHash is one explode + partial-aggregatable bit vote (60-bit
+    signature), near-dup = Hamming distance on two longs —
+    `bit_count(a ^ b)`;
   * n-gram Jaccard verifies candidate pairs exactly (set ops on shingle
-    arrays), run only on the LSH-survivor pairs.
+    arrays), run only on the LSH-survivor pairs;
+  * connected components label every node with the minimum id reachable
+    through the pair graph (min-label propagation).
+
+Every text hash is md5-derived (salted md5 sub-hashes for MinHash and the
+band keys, 15 hex digits of md5 for the SimHash token hash): md5 is
+identical in every engine, so the DuckDB oracle re-derives each
+signature, band key and pair hash-exactly.
 """
 
 from __future__ import annotations
@@ -195,19 +203,6 @@ def exact_duplicates(df: DataFrame, text_col: str = "text",
     )
 
 
-def shingles(df: DataFrame, text_col: str = "text", n: int = 5,
-             stride: int = 1, prefix: int | None = None) -> DataFrame:
-    """Character n-gram shingle array (optionally over a prefix only)."""
-    src = _src_sql(text_col, prefix)
-    return df.withColumn(
-        "shingles",
-        F.array_distinct(F.expr(
-            f"transform(sequence(1, greatest(length({src}) - {n - 1}, 1), "
-            f"{stride}), i -> substr({src}, i, {n}))"
-        )),
-    )
-
-
 def _src_sql(text_col: str, prefix: int | None) -> str:
     return f"substr(`{text_col}`, 1, {prefix})" if prefix else f"`{text_col}`"
 
@@ -239,8 +234,12 @@ def minhash_signatures_portable(df: DataFrame, text_col: str = "text",
     shingle, each split into 4 × 8-hex-char sub-hashes (string MIN is
     the per-index minimum — hex strings order like the integers they
     encode).  md5 is engine-universal, so the DuckDB oracle re-derives
-    identical signatures (hash-exact driver row); the xxhash64 variant
-    below stays the faster Spark-native path."""
+    identical signatures (hash-exact driver row).  MIN over the shingle
+    multiset equals MIN over the distinct set, so no dedup pass is
+    needed; the string MIN plans as a partial + final SortAggregate
+    (string MIN has no hash-aggregate buffer).  On a source that
+    :func:`_spread` leaves alone, the only shuffle carries the id + 16
+    sub-hashes."""
     sh = _exploded_shingles(
         _spread(df.select(id_col, text_col), id_col),
         text_col, id_col, shingle, 1, prefix,
@@ -761,69 +760,6 @@ def lsh_incremental_pairs(store_sigs: DataFrame | None,
     )
 
 
-def minhash_signatures(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", n_hashes: int = 16,
-                       shingle: int = 5, prefix: int = 400) -> DataFrame:
-    """MinHash signature: xxhash64 of each shingle salted per hash index,
-    per-index minimum.  Explode → codegen'd hash → partial-aggregatable
-    per-index MIN (map-side combine; the only shuffle carries the id +
-    n_hashes longs).  MIN over the shingle multiset equals MIN over the
-    distinct set, so no dedup pass is needed."""
-    sh = _exploded_shingles(
-        _spread(df.select(id_col, text_col), id_col),
-        text_col, id_col, shingle, 1, prefix,
-    )
-    # hash the variable-length shingle string ONCE, then derive the
-    # n_hashes independent values by re-hashing the resulting fixed
-    # 8-byte long with a per-index seed column — xxhash64 over a long
-    # is a few ns and allocation-free, vs n_hashes string concats +
-    # string hashes per shingle (measured ~2× on the signature stage)
-    hashed = sh.withColumn("h0", F.xxhash64(F.col("sh")))
-    sigs = hashed.groupBy(id_col).agg(
-        *[
-            F.min(F.xxhash64(F.lit(i), F.col("h0"))).alias(f"mh{i}")
-            for i in range(n_hashes)
-        ]
-    )
-    return sigs
-
-
-def lsh_candidate_pairs(df: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id", n_hashes: int = 16,
-                        bands: int = 4, shingle: int = 5,
-                        prefix: int = 400,
-                        collapse_threshold: float = 0.05) -> DataFrame:
-    """LSH banding: signature rows → (band, hash-of-band-rows) keys →
-    :func:`_bucket_pairs` (one bucket-key shuffle, no self-join) →
-    distinct candidate pairs.  Adaptive exact-duplicate collapse as in
-    :func:`lsh_candidate_pairs_portable` (identical texts never enter
-    the bucket explosion on duplication-heavy corpora)."""
-    collapsed = _adaptive_text_collapse(df, text_col, id_col, prefix,
-                                        collapse_threshold)
-    docs = df if collapsed is None else collapsed[2]
-    rows_per_band = n_hashes // bands
-    sigs = minhash_signatures(docs, text_col, id_col, n_hashes, shingle,
-                              prefix)
-    band_cols = [
-        F.xxhash64(*[F.col(f"mh{b * rows_per_band + r}")
-                     for r in range(rows_per_band)]).alias(f"band{b}")
-        for b in range(bands)
-    ]
-    banded = sigs.select(id_col, *band_cols)
-    stacked = banded.select(
-        id_col,
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band_id"), F.col(f"band{b}").alias("h"))
-            for b in range(bands)
-        ])).alias("bk"),
-    ).select(id_col, "bk.band_id", "bk.h")
-    pairs = _bucket_pairs(stacked, id_col, ["band_id", "h"])
-    if collapsed is None:
-        return pairs
-    th, gstats, _ = collapsed
-    return _expand_member_pairs(pairs, th, gstats, id_col)
-
-
 def pair_shingle_stats(df: DataFrame, pairs: DataFrame,
                        text_col: str = "text", id_col: str = "doc_id",
                        shingle: int = 3,
@@ -913,7 +849,10 @@ def pair_shingle_stats(df: DataFrame, pairs: DataFrame,
     # the broadcast build and array_intersect all work on 8-byte longs
     # instead of 3-char strings (interleaved A/B min-of-4 at sf0.1:
     # pair stats 4.50 → 3.59 s, stats rows identical).  Wider shingles
-    # keep the exact string path.
+    # keep the exact string path.  A NULL-text doc explodes to one NULL
+    # shingle, which must stay NULL so collect_set drops it exactly as
+    # on the string path (empty set, n = 0); ungated, the slot sum
+    # packs it to 0 and it matches the other NULL/empty docs' shingle.
     if shingle <= 3:
         slots = " + ".join(
             f"shiftleft(IF(length(sh) >= {i + 1}, "
@@ -921,7 +860,8 @@ def pair_shingle_stats(df: DataFrame, pairs: DataFrame,
             f"{21 * (shingle - 1 - i)})"
             for i in range(shingle)
         )
-        exploded = exploded.select(id_col, F.expr(slots).alias("sh"))
+        exploded = exploded.select(
+            id_col, F.expr(f"IF(sh IS NULL, NULL, {slots})").alias("sh"))
     sh = exploded.groupBy(id_col).agg(
         F.collect_set("sh").alias("shingles"))
     # join strategy deliberately un-hinted: the shingle-set side is
@@ -1710,104 +1650,6 @@ def remove_shared_spans(df: DataFrame, spans: DataFrame | None = None,
     )
 
 
-def _star_components(nodes: DataFrame, edges: DataFrame,
-                     id_col: str = "doc_id",
-                     a_col: str = "doc_a", b_col: str = "doc_b",
-                     max_iter: int = 30) -> tuple[DataFrame, int]:
-    """Alternating large-star/small-star connected components (the
-    MapReduce CC algorithm of Kiveris et al., "Connected Components in
-    MapReduce and Beyond", SoCC 2014 — public literature): converges in
-    O(log² n) rounds on ANY graph, vs graph-diameter rounds for plain
-    min-label propagation.  This is the adversarial-topology path — a
-    100 TB crawl can contain million-node duplicate chains (templated
-    pages each near-dup of the previous revision) where diameter-bound
-    propagation would run thousands of rounds.
-
-    Per round (two shuffle-bounded phases, no driver-side data):
-
-    * large-star — every node connects its LARGER neighbours to the
-      minimum of its neighbourhood (incl. itself);
-    * small-star — every node connects its smaller-or-equal neighbours
-      to that minimum.
-
-    Both phases are groupBy + equi-join on the node id.  Convergence is
-    detected by an order-insensitive (count, hash-sum) signature of the
-    edge set — one tiny driver action per round.  At the fixed point the
-    edge set is a star forest: every node points at its component's
-    minimum id.
-
-    Returns ``((id_col, component), rounds_run)``.
-    """
-    # localCheckpoint (not persist): each round references E four times
-    # (sym twice via the union, again through mins and the join), so the
-    # logical plan grows ~4× per round — by round ~10 an un-truncated
-    # lineage is millions of plan nodes and the DRIVER OOMs in the
-    # optimizer.  Checkpointing materializes the round's edge set on the
-    # executors and truncates the lineage to a leaf.
-    E = (
-        edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    prev_sig = None
-    rounds = 0
-    for rounds in range(1, max_iter + 1):
-        # --- large-star: for each u, m = min(N(u) ∪ {u});
-        #     emit (v, m) for every neighbour v > u
-        #     (explode-symmetrize: single pass over the checkpointed E)
-        sym = E.select(F.explode(F.array(
-            F.struct(F.col("u"), F.col("v")),
-            F.struct(F.col("v").alias("u"), F.col("u").alias("v")),
-        )).alias("e")).select("e.u", "e.v")
-        mins = (
-            sym.groupBy("u").agg(F.min("v").alias("mn"))
-            .select("u", F.least("mn", "u").alias("m"))
-        )
-        large = (
-            sym.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # --- small-star: orient high→low, m = min(N(u) ∪ {u});
-        #     emit (v, m) for every smaller neighbour v, plus (u, m)
-        oriented = large.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        smins = oriented.groupBy("u").agg(F.min("v").alias("m"))
-        stepped = (
-            oriented.join(smins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(smins.select("u", F.col("m").alias("v")))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint()  # truncate lineage — see E above
-        )
-        # bit_xor, not sum: order-insensitive over the (distinct) edge
-        # set and immune to ANSI long-overflow, which a sum of ~2^63
-        # hashes trips immediately
-        sig = stepped.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).collect()[0]
-        E = stepped
-        if prev_sig == (sig["n"], sig["h"]):
-            break
-        prev_sig = (sig["n"], sig["h"])
-    labels = E.groupBy("u").agg(F.min("v").alias("component"))
-    out = (
-        nodes.select(F.col(id_col).alias("node"))
-        .join(labels, F.col("node") == F.col("u"), "left")
-        .select(
-            F.col("node").alias(id_col),
-            F.coalesce("component", "node").alias("component"),
-        )
-    )
-    return out, rounds
-
-
 def _propagate_round(sym: DataFrame, lbl: DataFrame) -> DataFrame:
     """One min-label propagation round over a self-looped symmetric edge
     set; references ``lbl`` exactly once (r14 — single join + aggregate).
@@ -1835,27 +1677,27 @@ def _propagate_round(sym: DataFrame, lbl: DataFrame) -> DataFrame:
 def connected_components(nodes: DataFrame, edges: DataFrame,
                          id_col: str = "doc_id",
                          a_col: str = "doc_a", b_col: str = "doc_b",
-                         max_iter: int = 20,
-                         algorithm: str = "label") -> DataFrame:
+                         max_iter: int = 20) -> DataFrame:
     """Duplicate-cluster resolution: label every node with the MINIMUM id
     reachable through the near-dup pair graph (the canonical "keep" doc).
 
-    ``algorithm="label"`` (default): iterative min-label propagation as
-    pure DataFrame joins — per round, each node takes min(own label,
-    neighbours' labels); stop when a round changes nothing.  Rounds
-    needed = graph diameter — near-dup clusters are tiny quasi-cliques
-    (diameter ≲ 3), so this converges in 2-4 rounds and each round is a
+    Iterative min-label propagation as pure DataFrame joins — per round,
+    each node takes min(own label, neighbours' labels); stop when a
+    round changes nothing.  Rounds needed = graph diameter + 1 — near-dup
+    clusters are tiny quasi-cliques (diameter ≲ 3), so this converges in
+    2-4 rounds, and the semantic pair graphs need 9-10.  Each round is a
     single join + aggregate.
 
-    ``algorithm="star"``: the large-star/small-star alternation
-    (:func:`_star_components`) — O(log² n) rounds on ANY topology; use
-    for adversarial long-chain graphs where diameter-bound propagation
-    would not terminate in reasonable rounds.
+    Non-convergence is an error, never a silent partial result: when
+    ``max_iter`` rounds end with labels still changing (a graph whose
+    diameter reaches ``max_iter``), a ``RuntimeError`` naming the round
+    count is raised.  The check reuses the per-batch ``changed`` count,
+    so it costs no extra Spark job.
 
     The driver loop only coordinates; all data movement is
     shuffle-bounded joins on the id.  Returns (id_col, component).
 
-    Input contract (label path): node ids must be NON-NULL and unique.
+    Input contract: node ids must be NON-NULL and unique.
     A NULL-id node row has no usable self-loop (NULL never equi-joins),
     so it is dropped from the output, and duplicate node rows collapse
     to one output row — the r14 single-reference round deduplicates via
@@ -1864,13 +1706,6 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     labels through) the output on either formulation (pinned by
     test_connected_components_stray_edge_endpoints_ignored).
     """
-    if algorithm == "star":
-        out, _ = _star_components(nodes, edges, id_col, a_col, b_col,
-                                  max_iter)
-        return out
-    if algorithm != "label":
-        raise ValueError(f"unknown algorithm {algorithm!r}; "
-                         "expected 'label' or 'star'")
     # symmetrize via a single-scan explode, NOT edges ∪ reverse(edges):
     # a union references the edge derivation twice, and when the edges
     # are a full LSH chain the un-reused branches plan (and race to
@@ -1904,9 +1739,10 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     # the per-round action floor for long-diameter graphs (the 9-10
     # round semantic/phash pair graphs).  localCheckpoint (eager), not
     # persist: an un-truncated lineage re-plans an exponentially growing
-    # tree (see _star_components), and the checkpoint leaves the final
-    # generation materialized for the returned frame.
+    # tree, and the checkpoint leaves the final generation materialized
+    # for the returned frame.
     done = 0
+    converged = False
     while done < max_iter:
         batch = 1 if done < 2 else min(2, max_iter - done)
         stepped = _step(labels)
@@ -1922,48 +1758,41 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
             F.col("lab") != F.col("prev")
         ).limit(1).count()
         labels = stepped
-        if changed == 0:
+        converged = changed == 0
+        if converged:
             break
     # iteration over: the edge cache served only the in-loop count
     # actions; the final labels live on as their local checkpoint
     sym.unpersist()
+    if not converged:
+        raise RuntimeError(
+            f"connected_components did not converge in {done} rounds: "
+            f"labels still changed in round {done} (max_iter={max_iter})")
     return labels.select(F.col("node").alias(id_col),
                          F.col("lab").alias("component"))
 
 
 def simhash(df: DataFrame, text_col: str = "text",
-            id_col: str = "doc_id", portable: bool = False) -> DataFrame:
-    """SimHash over whitespace tokens: per-bit majority vote of token
-    hashes — pure built-in expressions (no UDF).
+            id_col: str = "doc_id") -> DataFrame:
+    """60-bit SimHash over single-space tokens: per-bit majority vote of
+    token hashes — pure built-in expressions (no UDF).  Output column
+    ``simhash60``.
 
-    Two hash modes:
-
-    * default: 64-bit xxhash64 (fastest; Spark-native, so driver
-      verification is rows-only);
-    * ``portable=True``: 60-bit hash from the first 15 hex digits of
-      md5 — md5 is identical in every engine, so the DuckDB oracle can
-      re-derive the signature EXACTLY (hash-exact driver row).  Output
-      column ``simhash60``; token split on single space (the corpus
-      convention both dialects tokenize identically).
-
-    The token-hash array is materialized as a real column first, so each
-    token is hashed exactly once; the bit votes then fold over the
-    hashed array (not the raw tokens)."""
+    The token hash is the first 15 hex digits of md5 — md5 is identical
+    in every engine, so the DuckDB oracle re-derives the signature
+    EXACTLY (hash-exact driver row); the split on a single space is the
+    corpus convention both dialects tokenize identically."""
     # Explode tokens (codegen'd split+explode+hash), then the bit-vote
     # SUMs in one partial-aggregatable groupBy — NOT aggregate() lambdas,
-    # which Spark evaluates interpreted (~10× slower).
-    n_bits = 60 if portable else 64
-    out_col = "simhash60" if portable else "simhash64"
-    split_pat = " " if portable else r"\s+"
-    hash_expr = (
-        F.expr("CAST(conv(substr(md5(__t), 1, 15), 16, 10) AS BIGINT)")
-        if portable else F.xxhash64("__t")
-    )
+    # which Spark evaluates interpreted (~10× slower).  Each token is
+    # hashed exactly once; the votes fold over the hashed rows.
     hashed = (
         _spread(df.select(id_col, text_col), id_col)
         .select(id_col,
-                F.explode(F.split(F.col(text_col), split_pat)).alias("__t"))
-        .select(id_col, hash_expr.alias("__h"))
+                F.explode(F.split(F.col(text_col), " ")).alias("__t"))
+        .select(id_col, F.expr(
+            "CAST(conv(substr(md5(__t), 1, 15), 16, 10) AS BIGINT)"
+        ).alias("__h"))
     )
     votes = hashed.groupBy(id_col).agg(
         *[
@@ -1972,26 +1801,20 @@ def simhash(df: DataFrame, text_col: str = "text",
                     F.shiftright("__h", bit).bitwiseAND(F.lit(1)) == 1, 1
                 ).otherwise(-1)
             ).alias(f"v{bit}")
-            for bit in range(n_bits)
+            for bit in range(60)
         ]
     )
-    # bits 0-62 accumulate to a non-negative long (≤ 2^63-1); in 64-bit
-    # mode bit 63 is added LAST as Long.MIN_VALUE so the signature is a
-    # true 64-bit pattern in a signed long with no step ever overflowing
-    # (positive + MIN_VALUE stays in range — safe under ANSI arithmetic).
+    # 60 bits accumulate to a non-negative long — no step can overflow
+    # under ANSI arithmetic
     body = sum(
         (
             F.when(F.col(f"v{bit}") > 0, F.lit(1 << bit).cast("long"))
             .otherwise(0)
-            for bit in range(min(n_bits, 63))
+            for bit in range(60)
         ),
         F.lit(0).cast("long"),
     )
-    if n_bits == 64:
-        body = body + F.when(
-            F.col("v63") > 0, F.lit(-(1 << 63)).cast("long")
-        ).otherwise(0)
-    return votes.select(id_col, body.alias(out_col))
+    return votes.select(id_col, body.alias("simhash60"))
 
 
 def hamming_neardup_pairs(sig: DataFrame, sig_col: str,
@@ -2003,7 +1826,7 @@ def hamming_neardup_pairs(sig: DataFrame, sig_col: str,
     (SimHash, perceptual aHash/dHash from ``multimodal.phash_images``,
     an audio fingerprint, ...) by Hamming distance: blocked on the four
     ``quarter_bits``-wide slices of the signature (16 for 64-bit
-    signatures, 15 for the 60-bit portable SimHash), so the join key is
+    signatures, 15 for the 60-bit SimHash), so the join key is
     a short block, never O(n²).  Pigeonhole: a pair within distance ≤ 3
     shares at least one identical quarter, so for ``max_hamming <= 3``
     the blocked join is EXACT (≡ all-pairs + filter); above 3 it is the
@@ -2192,20 +2015,14 @@ def hamming_incremental_pairs_either(store_sigs: DataFrame | None,
 def simhash_neardup_pairs(df: DataFrame, text_col: str = "text",
                           id_col: str = "doc_id",
                           max_hamming: int = 3,
-                          portable: bool = False,
                           max_bucket: int = 10_000) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance.  Blocked on quarters
-    of the signature (a pair within distance ≤3 shares at least one
-    identical quarter — pigeonhole), so the join key is a short block,
-    not O(n²).  ``portable=True`` blocks the 60-bit md5 signature on
-    15-bit quarters (same algorithm; DuckDB-reproducible)."""
+    """Near-dup pairs by SimHash Hamming distance.  Blocked on the four
+    15-bit quarters of the 60-bit signature (a pair within distance ≤3
+    shares at least one identical quarter — pigeonhole), so the join key
+    is a short block, not O(n²)."""
     # delegate to the generic signature-pair machinery (r12): the text
     # tier derives its signature, then blocks exactly like the
-    # perceptual/audio tiers — 15-bit quarters for the 60-bit portable
-    # hash, 16-bit for the 64-bit xxhash one.  Same physical plan as
-    # the pre-delegation inline spelling (oracle re-checked).
-    sig_col = "simhash60" if portable else "simhash64"
-    sig = simhash(df, text_col, id_col, portable=portable)
+    # perceptual/audio tiers, on 15-bit rather than 16-bit quarters.
     return hamming_neardup_pairs(
-        sig, sig_col, id_col, max_hamming, max_bucket,
-        quarter_bits=15 if portable else 16)
+        simhash(df, text_col, id_col), "simhash60", id_col, max_hamming,
+        max_bucket, quarter_bits=15)

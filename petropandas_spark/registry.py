@@ -2901,16 +2901,15 @@ LIMIT {topk}
 
 
 # ---------------------------------------------------------------------------
-# DuckDB oracles for the portable (md5-hashed) dedup module paths.
+# DuckDB oracles for the (md5-hashed) dedup module paths.
 # Each text re-derives the EXACT values the Spark module computes —
 # md5 is engine-universal, every other step is integer/string — so the
-# driver rows are hash-exact, not rows-only.  The xxhash64 module
-# variants remain the faster Spark-native production path.
+# driver rows are hash-exact, not rows-only.
 # ---------------------------------------------------------------------------
 
 def _simhash_duck_sigs() -> str:
     """CTE body computing (doc_id, simhash60) exactly as
-    dedup.simhash(portable=True): 60-bit hash = first 15 hex digits of
+    dedup.simhash: 60-bit hash = first 15 hex digits of
     md5(token); per-bit majority vote; bit set where vote > 0."""
     h60 = " + ".join(
         f"(strpos('0123456789abcdef', substr(h, {j}, 1)) - 1)"
@@ -3845,18 +3844,15 @@ def _pipeline_queries() -> dict[str, QuerySpec]:
     def docs(spark, sf_dir):
         return _load(spark, sf_dir, "documents")
 
-    # Registered specs use the PORTABLE (md5) module paths so the DuckDB
-    # oracle re-derives identical values — hash-exact driver rows.  The
-    # xxhash64 variants remain the faster Spark-native production path
-    # (covered by tests/test_pipeline.py).
+    # The dedup module hashes text with md5 only, so the DuckDB oracle
+    # re-derives identical values — hash-exact driver rows.
     out["simhash_signatures"] = QuerySpec(
-        lambda spark, sf_dir: _dd.simhash(docs(spark, sf_dir),
-                                          portable=True),
+        lambda spark, sf_dir: _dd.simhash(docs(spark, sf_dir)),
         SIMHASH_SIGS_DUCK,
     )
     out["simhash_neardup_pairs"] = QuerySpec(
         lambda spark, sf_dir: _dd.simhash_neardup_pairs(
-            docs(spark, sf_dir), max_hamming=6, portable=True
+            docs(spark, sf_dir), max_hamming=6
         ),
         SIMHASH_PAIRS_DUCK,
     )
@@ -4634,18 +4630,6 @@ reach(node, lab) AS (
 SELECT node AS doc_id, MIN(lab) AS component FROM reach GROUP BY node
 """
     out["dedup_components"] = QuerySpec(comps_fn, comps_duck)
-
-    # the same fixpoint through the O(log² n)-round large-star/small-star
-    # alternation (adversarial-topology path; dedup.py _star_components)
-    # — identical oracle, third independent algorithm
-    def comps_star_fn(spark, sf_dir):
-        docs = _load(spark, sf_dir, "documents")
-        docs.createOrReplaceTempView("documents")
-        pairs = spark.sql(DOC_NEARDUP_SPARK)
-        return _dd.connected_components(docs.select("doc_id"), pairs,
-                                        algorithm="star")
-
-    out["dedup_components_star"] = QuerySpec(comps_star_fn, comps_duck)
 
     # incremental ingestion near-dup: the settled corpus contributes only
     # its persisted signature store (no re-shingling), the new batch

@@ -20,7 +20,8 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from petropandas_spark.frame import PetroFrame, ieee_div_col
+from petropandas_spark import minerals
+from petropandas_spark.frame import PetroFrame, clean_plan, ieee_div_col
 
 
 def test_weighted_mean_zero_weight_group_flows_nan(spark):
@@ -190,19 +191,79 @@ def test_ieee_div_col_semantics(spark):
 
 
 # -- blank-analysis rows through the mineral framework ------------------------
+#
+# Row 0 is a real analysis, row 1 a blank one (all oxides 0).  The Spark
+# side runs unconditionally against the reference's blank-row semantics,
+# inlined below; the value-for-value comparison with the live reference
+# package runs only where it is importable.
 
-def _ref_mineral(method, data, cfg):
-    import sys
-    for p in ("/root/repo/tools/refshim", "/root/reference/src"):
-        if p not in sys.path:
-            sys.path.insert(0, p)
-    import numpy as np
-    import petropandas  # noqa: F401 — registers the .mineral accessor
-    with np.errstate(all="ignore"):
-        out = getattr(pd.DataFrame(data).mineral, method)(cfg)
-    if hasattr(out.columns, "levels"):  # flatten (site, ion) MultiIndex
-        out.columns = [f"{a}__{b}" for a, b in out.columns]
-    return out.reset_index(drop=True)
+GRT_DATA = {"SiO2": [38.5, 0.0], "Al2O3": [22.1, 0.0], "FeO": [28.3, 0.0],
+            "MgO": [5.2, 0.0], "CaO": [3.8, 0.0], "MnO": [1.5, 0.0]}
+CPX_DATA = {"SiO2": [52.0, 0.0], "Al2O3": [3.0, 0.0], "FeO": [7.0, 0.0],
+            "MgO": [15.0, 0.0], "CaO": [20.0, 0.0], "Na2O": [0.8, 0.0]}
+
+# (reference method, reference mineral, Spark emitter, data, column
+# layout, what the blank row must read)
+_BLANK_CASES = {
+    # allocation keeps NaN (pandas clip); the M4 cross-site sum then
+    # SKIPS the NaN parts (pandas groupby .sum()), so apfu is 0.0
+    "grt_site_allocations": (
+        "site_allocations", "Grt",
+        lambda plan, fcols: minerals.add_site_allocations_flat(
+            plan, fcols, minerals.GARNET, carry=["id"]),
+        GRT_DATA,
+        ["Z__Si{4+}", "Z__Al{3+}", "Z___unallocated",
+         "Y__Al{3+}", "Y__Fe{3+}", "Y___unallocated",
+         "X__Fe{2+}", "X__Mg{2+}", "X__Ca{2+}", "X__Mn{2+}",
+         "X___unallocated"],
+        "nan"),
+    "grt_apfu": (
+        "apfu", "Grt",
+        lambda plan, fcols: minerals.add_apfu(
+            plan, fcols, minerals.GARNET, carry=["id"]),
+        GRT_DATA,
+        ["Al{3+}", "Ca{2+}", "Fe{2+}", "Fe{3+}", "Mg{2+}", "Mn{2+}",
+         "Si{4+}"],
+        "zero"),
+    # the reference's where(total>0, 0) gate zeroes a blank row's end
+    # members
+    "grt_end_members": (
+        "end_members", "Grt",
+        lambda plan, fcols: minerals.add_garnet_end_members(
+            plan, fcols, carry=["id"]),
+        GRT_DATA,
+        ["Prp", "Alm", "Sps", "Grs", "Adr", "Uvr"],
+        "zero"),
+    "cpx_end_members": (
+        "end_members", "Cpx",
+        lambda plan, fcols: minerals.add_cpx_end_members(
+            plan, fcols, carry=["id"]),
+        CPX_DATA,
+        ["Jd", "Ae", "Di", "Hd", "Kosmochlor", "CaTs", "Wo", "En", "Fs"],
+        "zero"),
+}
+
+
+def _spark_blank_case(spark, name):
+    _, _, emit, data, _, _ = _BLANK_CASES[name]
+    pdf = pd.DataFrame(data)
+    pdf.insert(0, "id", [0, 1])
+    df = spark.createDataFrame(pdf)
+    plan, fcols, _ = clean_plan(df.columns)
+    emit(plan, fcols)
+    return (plan.apply(df).toPandas().sort_values("id")
+            .reset_index(drop=True).drop(columns=["id"]))
+
+
+def _check_blank_case(spark, name):
+    _, _, _, _, columns, blank_is = _BLANK_CASES[name]
+    got = _spark_blank_case(spark, name)
+    assert list(got.columns) == columns, name
+    assert got.iloc[0].notna().all(), name  # the real analysis resolves
+    if blank_is == "nan":
+        assert got.iloc[1].isna().all(), name
+    else:
+        assert (got.iloc[1] == 0.0).all(), name
 
 
 def test_blank_row_site_allocation_stays_nan(spark):
@@ -211,73 +272,34 @@ def test_blank_row_site_allocation_stays_nan(spark):
     ``_minerals.py:211``) — bare LEAST treats NaN as the LARGEST double
     and FABRICATED a perfectly-filled site (Z_Si=3, Y_Al=2, X_Fe=3 from
     a blank row, observed pre-fix).  clip_upper pins pandas semantics."""
-    import sys
-    for p in ("/root/repo/tools/refshim", "/root/reference/src"):
-        if p not in sys.path:
-            sys.path.insert(0, p)
-    from petropandas._minerals import Grt
-
-    from petropandas_spark import minerals
-    from petropandas_spark.frame import clean_plan
-
-    data = {"SiO2": [38.5, 0.0], "Al2O3": [22.1, 0.0],
-            "FeO": [28.3, 0.0], "MgO": [5.2, 0.0],
-            "CaO": [3.8, 0.0], "MnO": [1.5, 0.0]}
-    pdf = pd.DataFrame(data)
-    pdf.insert(0, "id", [0, 1])
-    df = spark.createDataFrame(pdf)
-
-    for method, build, cfg, blank_is in [
-        # allocation keeps NaN (pandas clip); the M4 cross-site sum then
-        # SKIPS the NaN parts (pandas groupby .sum()), so apfu is 0.0
-        ("site_allocations", minerals.add_site_allocations_flat, Grt,
-         "nan"),
-        ("apfu", minerals.add_apfu, Grt, "zero"),
-    ]:
-        plan, fcols, _ = clean_plan(df.columns)
-        getattr(minerals, build.__name__)(plan, fcols, minerals.GARNET,
-                                          carry=["id"])
-        got = (plan.apply(df).toPandas().sort_values("id")
-               .reset_index(drop=True).drop(columns=["id"]))
-        want = _ref_mineral(method, data, cfg)
-        assert list(got.columns) == list(want.columns), method
-        pd.testing.assert_frame_equal(got, want, atol=1e-9, rtol=1e-9)
-        if blank_is == "nan":
-            assert got.iloc[1].isna().all(), method
-        else:
-            assert (got.iloc[1] == 0.0).all(), method
+    for name in ("grt_site_allocations", "grt_apfu"):
+        _check_blank_case(spark, name)
 
 
 def test_blank_row_end_members_match_reference(spark):
     """Locock garnet + IMA cpx end members on a blank row: the
     fabricated intermediates previously leaked through the clip chain;
     the reference's where(total>0, 0) gate zeroes the row — ours must
-    match it value-for-value on both rows."""
+    too."""
+    for name in ("grt_end_members", "cpx_end_members"):
+        _check_blank_case(spark, name)
+
+
+@pytest.mark.parametrize("name", sorted(_BLANK_CASES))
+def test_blank_rows_match_live_reference(spark, name):
+    """Both rows of every blank-row case, value for value against the
+    reference package's pandas output (skipped where it is absent)."""
     import sys
     for p in ("/root/repo/tools/refshim", "/root/reference/src"):
         if p not in sys.path:
             sys.path.insert(0, p)
-    from petropandas._minerals import Cpx, Grt
-
-    from petropandas_spark import minerals
-    from petropandas_spark.frame import clean_plan
-
-    cases = [
-        (Grt, minerals.add_garnet_end_members,
-         {"SiO2": [38.5, 0.0], "Al2O3": [22.1, 0.0], "FeO": [28.3, 0.0],
-          "MgO": [5.2, 0.0], "CaO": [3.8, 0.0], "MnO": [1.5, 0.0]}),
-        (Cpx, minerals.add_cpx_end_members,
-         {"SiO2": [52.0, 0.0], "Al2O3": [3.0, 0.0], "FeO": [7.0, 0.0],
-          "MgO": [15.0, 0.0], "CaO": [20.0, 0.0], "Na2O": [0.8, 0.0]}),
-    ]
-    for cfg, emitter, data in cases:
-        want = _ref_mineral("end_members", data, cfg)
-        pdf = pd.DataFrame(data)
-        pdf.insert(0, "id", [0, 1])
-        df = spark.createDataFrame(pdf)
-        plan, fcols, _ = clean_plan(df.columns)
-        emitter(plan, fcols, carry=["id"])
-        got = (plan.apply(df).toPandas().sort_values("id")
-               .reset_index(drop=True).drop(columns=["id"]))
-        assert list(got.columns) == list(want.columns)
-        pd.testing.assert_frame_equal(got, want, atol=1e-9, rtol=1e-9)
+    ref = pytest.importorskip("petropandas._minerals")
+    method, cfg, _, data, _, _ = _BLANK_CASES[name]
+    with np.errstate(all="ignore"):
+        want = getattr(pd.DataFrame(data).mineral, method)(getattr(ref, cfg))
+    if hasattr(want.columns, "levels"):  # flatten (site, ion) MultiIndex
+        want.columns = [f"{a}__{b}" for a, b in want.columns]
+    want = want.reset_index(drop=True)
+    got = _spark_blank_case(spark, name)
+    assert list(got.columns) == list(want.columns)
+    pd.testing.assert_frame_equal(got, want, atol=1e-9, rtol=1e-9)

@@ -30,7 +30,7 @@ class TestDedup:
         assert out.filter(F.col("n_copies") > 1).count() >= 0
 
     def test_minhash_lsh_finds_exact_dups(self, spark, docs):
-        pairs = dedup.lsh_candidate_pairs(docs).cache()
+        pairs = dedup.lsh_candidate_pairs_portable(docs).cache()
         # every exact-duplicate pair must be an LSH candidate
         dup_groups = (
             docs.groupBy(F.md5("text").alias("h"))
@@ -56,22 +56,21 @@ class TestDedup:
         tiers must be row-invisible: on a corpus where half the docs are
         exact copies, the collapse path (threshold forced to 0) and the
         per-pair bypass (threshold forced above 1) emit the SAME pair
-        set, for both the portable and xxhash64 variants."""
+        set."""
         base = docs.limit(60).select("doc_id", "text")
         copies = base.selectExpr("doc_id + 1000000 AS doc_id", "text")
         corpus = base.unionByName(copies)
-        for fn in (dedup.lsh_candidate_pairs_portable,
-                   dedup.lsh_candidate_pairs):
-            collapse = {(r.doc_a, r.doc_b) for r in
-                        fn(corpus, collapse_threshold=0.0).collect()}
-            bypass = {(r.doc_a, r.doc_b) for r in
-                      fn(corpus, collapse_threshold=2.0).collect()}
-            assert collapse == bypass, fn.__name__
-            # the twin pairs themselves are present (identical texts
-            # are guaranteed candidates)
-            twin = {(r.doc_id, r.doc_id + 1000000)
-                    for r in base.select("doc_id").collect()}
-            assert twin <= collapse, fn.__name__
+        fn = dedup.lsh_candidate_pairs_portable
+        collapse = {(r.doc_a, r.doc_b) for r in
+                    fn(corpus, collapse_threshold=0.0).collect()}
+        bypass = {(r.doc_a, r.doc_b) for r in
+                  fn(corpus, collapse_threshold=2.0).collect()}
+        assert collapse == bypass
+        # the twin pairs themselves are present (identical texts are
+        # guaranteed candidates)
+        twin = {(r.doc_id, r.doc_id + 1000000)
+                for r in base.select("doc_id").collect()}
+        assert twin <= collapse
 
     def test_text_stats_cache_memoizes_per_plan(self, spark, docs):
         """The duplication-statistics scan memoizes per logical plan:
@@ -150,14 +149,13 @@ class TestDedup:
                 T.StructField("text", T.StringType()),
             ]))
         corpus = docs.limit(40).select("doc_id", "text").unionByName(extra)
-        for fn in (dedup.lsh_candidate_pairs_portable,
-                   dedup.lsh_candidate_pairs):
-            collapse = {(r.doc_a, r.doc_b) for r in
-                        fn(corpus, collapse_threshold=0.0).collect()}
-            bypass = {(r.doc_a, r.doc_b) for r in
-                      fn(corpus, collapse_threshold=2.0).collect()}
-            assert collapse == bypass, fn.__name__
-            assert (9000001, 9000002) in collapse, fn.__name__
+        fn = dedup.lsh_candidate_pairs_portable
+        collapse = {(r.doc_a, r.doc_b) for r in
+                    fn(corpus, collapse_threshold=0.0).collect()}
+        bypass = {(r.doc_a, r.doc_b) for r in
+                  fn(corpus, collapse_threshold=2.0).collect()}
+        assert collapse == bypass
+        assert (9000001, 9000002) in collapse
 
     def test_span_collapse_ignores_null_texts(self, spark):
         """The span tier produces no extents for NULL texts on either
@@ -312,7 +310,7 @@ class TestDedup:
                      "a completely different document body entirely"],
         })
         sig = dedup.simhash(spark.createDataFrame(pdf)).toPandas()
-        sig = sig.set_index("doc_id")["simhash64"]
+        sig = sig.set_index("doc_id")["simhash60"]
         assert sig[1] == sig[2]
         assert sig[1] != sig[3]
 
@@ -415,8 +413,10 @@ class TestDedup:
         into longs.  The encoding must stay injective on the edge
         classes a byte-exact recode can get wrong: embedded NUL chars,
         docs shorter than the shingle, empty text, non-ASCII
-        codepoints.  Counts are checked against a brute-force python
-        computation of the same distinct-3-gram sets."""
+        codepoints, and NULL text (no shingle at all, where empty text
+        has the one '' shingle).  Counts are checked against a
+        brute-force python computation of the same distinct-3-gram
+        sets."""
         texts = {
             1: "ab",                 # shorter than the shingle
             2: "ab\x00",             # 'ab' + NUL ≠ 'ab'
@@ -425,6 +425,7 @@ class TestDedup:
             5: "héllo€",             # codepoints past 8 and 16 bits
             6: "héllo€",             # exact duplicate of 5
             7: "abcab",
+            8: None,                 # NULL text → no shingle ≠ ''
         }
         docs = spark.createDataFrame(pd.DataFrame(
             {"doc_id": list(texts), "text": list(texts.values())}))
@@ -435,6 +436,8 @@ class TestDedup:
             columns=["doc_a", "doc_b"]))
 
         def grams(s):
+            if s is None:
+                return set()
             if len(s) <= 3:
                 return {s}
             return {s[i:i + 3] for i in range(len(s) - 2)}
@@ -1817,48 +1820,25 @@ class TestComponents:
         }
         assert got == {1: 1, 3: 3}
 
-    def test_star_components_match_label_propagation(self, spark):
-        """Both algorithms agree on a mixed graph (chain + pair +
-        singletons)."""
-        nodes = spark.createDataFrame(
-            [(i,) for i in range(1, 9)], "doc_id long"
-        )
+    def test_connected_components_raises_when_unconverged(self, spark):
+        """A chain with more hops than ``max_iter`` cannot reach its
+        fixpoint; the labels must not come back silently half-propagated
+        — the call raises and names the round count."""
+        n = 10
+        nodes = spark.createDataFrame([(i,) for i in range(n)],
+                                      "doc_id long")
         edges = spark.createDataFrame(
-            [(1, 2), (2, 3), (3, 4), (6, 7)], "doc_a long, doc_b long"
+            [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
         )
+        with pytest.raises(RuntimeError, match="in 3 rounds"):
+            dedup.connected_components(nodes, edges, max_iter=3)
+        # the same chain converges once max_iter exceeds its diameter
         got = {
             r.doc_id: r.component
             for r in dedup.connected_components(
-                nodes, edges, algorithm="star"
-            ).collect()
+                nodes, edges, max_iter=n).collect()
         }
-        assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 6, 7: 6, 8: 8}
-
-    def test_star_components_chain_logarithmic_rounds(self, spark):
-        """The adversarial case the star variant exists for: a planted
-        1000-node chain (diameter 999 — min-label propagation would need
-        ~1000 rounds) must fully resolve in O(log² n) rounds, ≤ 12 in
-        practice."""
-        n = 1000
-        nodes = spark.range(n).select(F.col("id").alias("doc_id"))
-        edges = spark.range(n - 1).select(
-            F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b")
-        )
-        out, rounds = dedup._star_components(nodes, edges)
-        labels = {r.doc_id: r.component for r in out.collect()}
-        assert labels == {i: 0 for i in range(n)}
-        assert rounds <= 12, rounds
-
-    def test_star_components_no_edges(self, spark):
-        nodes = spark.createDataFrame([(3,), (9,)], "doc_id long")
-        edges = spark.createDataFrame([], "doc_a long, doc_b long")
-        got = {
-            r.doc_id: r.component
-            for r in dedup.connected_components(
-                nodes, edges, algorithm="star"
-            ).collect()
-        }
-        assert got == {3: 3, 9: 9}
+        assert got == {i: 0 for i in range(n)}
 
 
 class TestTemporal:

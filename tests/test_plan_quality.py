@@ -100,14 +100,29 @@ def test_cipw_is_single_arrow_stage(spark, registry):
 
 def test_minhash_shuffles_only_signatures(spark):
     """The minhash groupBy must be a partial aggregation (map-side
-    combine): plan shows HashAggregate before and after the exchange."""
+    combine): one exchange, with the partial per-index MIN below it and
+    the final MIN above it, so the shuffle carries the id + sub-hashes,
+    never the shingles or the text.  The source is an in-memory frame
+    so ``_spread`` (which repartitions single-file sources by id) stays
+    out of the plan.  String MIN has no hash-aggregate buffer, so both
+    aggregates plan as SortAggregate."""
     from petropandas_spark.pipeline import dedup
 
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = _plan(dedup.minhash_signatures(docs), "simple")
-    assert plan.count("HashAggregate") >= 2
-    # exactly the aggregation exchanges (repartition spread + final agg)
-    assert "SortAggregate" not in plan
+    docs = spark.createDataFrame(
+        spark.read.parquet(f"{SF}/documents.parquet")
+        .select("doc_id", "text").toPandas())
+    lines = _plan(dedup.minhash_signatures_portable(docs),
+                  "simple").splitlines()
+    exchanges = [i for i, ln in enumerate(lines) if "Exchange" in ln]
+    assert len(exchanges) == 1, lines
+    assert "hashpartitioning(doc_id" in lines[exchanges[0]]
+    aggs = [i for i, ln in enumerate(lines) if "SortAggregate(" in ln]
+    assert len(aggs) == 2, lines
+    assert "HashAggregate" not in "\n".join(lines)
+    final, partial = aggs  # the plan prints the root first
+    assert final < exchanges[0] < partial
+    assert "partial_min(" in lines[partial]
+    assert "partial_min(" not in lines[final]
 
 
 def test_lsh_cosine_pairs_no_nested_loop(spark, registry):
