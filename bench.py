@@ -1,5 +1,6 @@
 """Benchmark harness: runs every registry query at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints one
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the
+cores in this process's CPU affinity mask) and prints one
 JSON line: {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}.
 
 Timing = full execution to a driver-visible result, but without paying
@@ -45,7 +46,13 @@ def compact_line(total: float, sf: float, timings: dict[str, float],
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS",
+                          str(len(os.sched_getaffinity(0))))
+    # an eighth of host RAM, 1-8 GiB (as perfbench sizes it): sf0.1
+    # needs a fraction of that, and a heap near all of RAM showed G1
+    # full collections as random 30-60 s stalls on single queries
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    driver_mb = max(1024, min(ram_mb // 8, 8192))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 
     repo = os.path.dirname(os.path.abspath(__file__))
@@ -85,10 +92,7 @@ def main() -> None:
         # task overhead).  At 100 TB the default is fine — file count,
         # not file size, provides the parallelism there.
         .config("spark.sql.files.maxPartitionBytes", "32m")
-        # 24g, not all of RAM: sf0.1 needs a fraction of it, and G1 full
-        # collections on a ~100g heap showed up as random 30-60s stalls
-        # on single queries mid-bench
-        .config("spark.driver.memory", "24g")
+        .config("spark.driver.memory", f"{driver_mb}m")
         # ~100 queries × many whole-stage-codegen units exhaust the JVM's
         # default 240 MB JIT code cache mid-run; once it fills, late
         # queries execute interpreted (measured 2-5× slower).  Standard

@@ -5,10 +5,11 @@ data-processing capabilities of ondrolexa/petropandas (reference read-only at
 Architecture (SURVEY.md §7): the scalar layer is *dual-dialect SQL
 generation* (``sqlgen.Plan``) — every operator is a chain of projection
 stages whose expressions are valid in both Spark SQL and DuckDB.  Spark
-executes them via ``selectExpr`` (ordinary Catalyst expressions:
-whole-stage-codegen'd, constant-folded, collapsed, pushed down); the same
-builder renders the DuckDB oracle SQL for the driver's correctness gate,
-so both engines evaluate the identical IEEE-754 expression tree.
+runs a plan as one nested ``spark.sql`` SELECT (ordinary Catalyst
+expressions: whole-stage-codegen'd, constant-folded, collapsed, pushed
+down); the same renderer emits the DuckDB oracle SQL for the driver's
+correctness gate, so both engines evaluate the identical IEEE-754
+expression tree.
 
 Layers:
   core         driver-side chemistry (column-name → constants)

@@ -8,8 +8,8 @@ per-row ``petro_total`` becomes a real hidden column ``__petro_total``
 (SURVEY.md §1.2).
 
 All transformations are *lazy*: methods build a ``sqlgen.Plan`` from the
-current schema (driver-side only) and apply it as chained ``selectExpr``
-projections — Catalyst collapses / constant-folds / codegens the chain;
+current schema (driver-side only) and apply it as one nested ``spark.sql``
+SELECT — Catalyst collapses / constant-folds / codegens the chain;
 nothing executes until an action.
 """
 

@@ -1,10 +1,12 @@
 """Dual-dialect SQL expression generation.
 
 The engine's scalar layer is built from SQL expression strings that are
-valid in BOTH Spark SQL and DuckDB.  The Spark engine executes them with
-``DataFrame.selectExpr`` (they become ordinary Catalyst expressions —
+valid in BOTH Spark SQL and DuckDB.  A :class:`Plan` renders its stages
+as one nested SELECT; the Spark engine runs that text with one
+``spark.sql`` call over a temporary view of the input (one parse and one
+analysis per plan; the expressions become ordinary Catalyst expressions —
 whole-stage-codegen'd, constant-folded, collapsed across stages by
-``CollapseProject``), and the *same* builder emits the DuckDB oracle SQL
+``CollapseProject``), and the *same* renderer emits the DuckDB oracle SQL
 for the driver's correctness gate.  Because both engines then evaluate
 the identical IEEE-754 expression tree, per-row results are bitwise
 identical — no tolerance games.
@@ -12,7 +14,8 @@ identical — no tolerance games.
 Rules for portability (verified against Spark 4.1 / DuckDB 1.0):
   * float literals must carry an exponent (``0.01`` is DECIMAL in both
     dialects; ``1e-2`` / ``0.01e0`` is DOUBLE) — use :func:`flit`;
-  * identifiers are quoted per dialect (backticks vs double quotes);
+  * identifiers are quoted per dialect (backticks vs double quotes, an
+    embedded quote character doubled);
   * stick to ANSI scalar functions present in both: CASE WHEN, LEAST,
     GREATEST, ABS, EXP, LN, SQRT, POWER, COALESCE, ROUND.
 """
@@ -20,7 +23,8 @@ Rules for portability (verified against Spark 4.1 / DuckDB 1.0):
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass, field
+import uuid
+from dataclasses import dataclass, field, replace
 
 
 def flit(x: float) -> str:
@@ -43,19 +47,32 @@ def flit(x: float) -> str:
     return s + "e0"
 
 
+#: ``coalesce`` bound of a codegen barrier: never below a real partition
+#: count, so the coalesce keeps the child's partitions 1:1
+_BARRIER_PARTITIONS = 1 << 30
+
+
 @dataclass(frozen=True)
 class Dialect:
-    """Identifier quoting for one engine."""
+    """Identifier quoting for one engine, and the optimizer hint (if any)
+    that opens a codegen-barrier SELECT in :meth:`Plan.to_sql`."""
 
     name: str
     qchar_open: str
     qchar_close: str
+    barrier_hint: str = ""
 
     def quote(self, ident: str) -> str:
-        return f"{self.qchar_open}{ident}{self.qchar_close}"
+        """Quote *ident*, doubling any embedded closing quote character."""
+        c = self.qchar_close
+        return f"{self.qchar_open}{ident.replace(c, c + c)}{c}"
 
 
-SPARK = Dialect("spark", "`", "`")
+SPARK = Dialect("spark", "`", "`",
+                f"/*+ COALESCE({_BARRIER_PARTITIONS}) */")
+# micro-batch plans are built per batch and coalesce semantics differ
+# mid-stream, so a streaming input gets no barrier (as in codegen_barrier)
+_SPARK_STREAMING = replace(SPARK, barrier_hint="")
 DUCKDB = Dialect("duckdb", '"', '"')
 # For SQL text shared verbatim between engines; only safe for identifiers
 # that need no quoting in either dialect (plain alphanumerics).
@@ -153,7 +170,7 @@ def trapezoid(value: str, lo: float, hi: float, margin: float = 1.5) -> str:
 # ---------------------------------------------------------------------------
 
 #: Accumulated non-passthrough expression text (chars) a fused
-#: whole-stage-codegen span may carry before Plan.apply inserts a
+#: whole-stage-codegen span may carry before Plan.to_sql inserts a
 #: codegen barrier.  HotSpot silently refuses to JIT-compile any method
 #: over 8000 bytecode (-XX:DontCompileHugeMethods, ON by default — a
 #: managed cluster can't be assumed to carry the opt-out flag), and a
@@ -183,7 +200,7 @@ def codegen_barrier(df):
     """
     if getattr(df, "isStreaming", False):
         return df
-    return df.coalesce(1 << 30)
+    return df.coalesce(_BARRIER_PARTITIONS)
 
 
 # ---------------------------------------------------------------------------
@@ -225,11 +242,12 @@ class Stage:
 
 @dataclass
 class Plan:
-    """A chain of stages over a named base relation.
+    """A chain of stages over a named base relation, rendered by
+    :meth:`to_sql` as nested sub-selects for either engine.
 
-    * Spark: ``apply(df)`` → chained ``selectExpr`` (Catalyst collapses
-      the chain into a single projection).
-    * DuckDB: ``to_sql(base)`` → nested sub-selects for the oracle.
+    * Spark: ``apply(df)`` → one ``spark.sql`` over the rendered plan
+      (Catalyst collapses the nested projections into one).
+    * DuckDB: ``to_sql(base)`` → the oracle text.
     """
 
     stages: list[Stage] = field(default_factory=list)
@@ -250,34 +268,47 @@ class Plan:
     def apply(self, df):
         """Run the plan on a Spark DataFrame.
 
-        Catalyst fuses the selectExpr chain into one whole-stage-codegen
-        span; when the accumulated expression text says the span's
-        generated method would cross HotSpot's 8000-bytecode JIT ceiling
-        (see CODEGEN_SPLIT_TEXT), a codegen barrier is inserted BEFORE
-        the stage that would cross, so every span stays JIT-compilable
-        on a stock JVM — no -XX:-DontCompileHugeMethods dependency."""
-        q = SPARK.quote
-        acc = 0
-        for i, st in enumerate(self.stages):
-            rendered = st.render(SPARK)
-            # passthrough columns ("x AS x") fuse to nothing; only real
-            # expression text contributes generated code
-            weight = sum(len(e) for a, e in rendered if e != q(a))
-            if acc and acc + weight > CODEGEN_SPLIT_TEXT:
-                df = codegen_barrier(df)
-                acc = 0
-            acc += weight
-            df = df.selectExpr(*[f"{e} AS {q(a)}" for a, e in rendered])
-            for pred in self.filters.get(i, []):
-                df = df.filter(self._render_pred(pred, SPARK))
-        return df
+        *df* is registered as a uniquely named temporary view and the
+        plan runs as ONE ``spark.sql`` over it: one parse and one
+        analysis for the whole chain (Spark analyzes every DataFrame
+        call eagerly, so a call per stage would re-analyze the growing
+        plan at each stage).  The view is dropped before
+        returning (the analyzed plan no longer needs it), also when
+        analysis fails."""
+        spark = df.sparkSession
+        view = f"_petro_plan_{uuid.uuid4().hex}"
+        df.createOrReplaceTempView(view)
+        try:
+            dialect = _SPARK_STREAMING if df.isStreaming else SPARK
+            return spark.sql(
+                self.to_sql(f"SELECT * FROM {SPARK.quote(view)}", dialect))
+        finally:
+            spark.catalog.dropTempView(view)
 
     def to_sql(self, base: str, dialect: Dialect = DUCKDB) -> str:
-        """Render the full plan as one nested SELECT over *base*."""
+        """Render the full plan as one nested SELECT over *base*.
+
+        Catalyst fuses the nested projections into one whole-stage-codegen
+        span; when the accumulated expression text says the span's
+        generated method would cross HotSpot's 8000-bytecode JIT ceiling
+        (see CODEGEN_SPLIT_TEXT), a dialect with a ``barrier_hint`` gets
+        a codegen barrier (``SELECT <hint> * FROM (...)``) BEFORE the
+        stage that would cross, so every span stays JIT-compilable on a
+        stock JVM — no -XX:-DontCompileHugeMethods dependency.  DuckDB
+        has no hint, so its oracle text carries no barrier."""
         q = dialect.quote
         sql = base
+        acc = 0
         for i, st in enumerate(self.stages):
             rendered = st.render(dialect)
+            if dialect.barrier_hint:
+                # passthrough columns ("x AS x") fuse to nothing; only
+                # real expression text contributes generated code
+                weight = sum(len(e) for a, e in rendered if e != q(a))
+                if acc and acc + weight > CODEGEN_SPLIT_TEXT:
+                    sql = f"SELECT {dialect.barrier_hint} * FROM ({sql})"
+                    acc = 0
+                acc += weight
             select = ", ".join(f"{e} AS {q(a)}" for a, e in rendered)
             preds = [self._render_pred(p, dialect) for p in self.filters.get(i, [])]
             where = f" WHERE {' AND '.join(preds)}" if preds else ""

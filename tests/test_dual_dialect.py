@@ -1,7 +1,7 @@
 """The engine's load-bearing property: a ``sqlgen.Plan`` evaluates to
-*identical* results in Spark (``selectExpr`` chain) and DuckDB (nested
-sub-selects) — this is what makes the driver's duckdb-oracle correctness
-gate pass by construction."""
+*identical* results in Spark and DuckDB (the same nested SELECT, run by
+one ``spark.sql`` and by DuckDB) — this is what makes the driver's
+duckdb-oracle correctness gate pass by construction."""
 
 import duckdb
 import pandas as pd
