@@ -13,50 +13,35 @@ nearest centroids, cutting the scan to ``n_probe/k`` of the corpus.  At
 
 from __future__ import annotations
 
-try:
-    # pandas_udf type hints resolve via module globals (the `from
-    # __future__ import annotations` stringized hints are looked up here),
-    # so `pd` must be a module-level name — but pandas is an OPTIONAL
-    # pyspark dependency, so the import must not be a hard requirement for
-    # the (pandas-free) default verify paths.
-    import pandas as pd
-except ImportError:  # pragma: no cover — container always has pandas
-    pd = None  # deferred: _pair_dot_arrow raises if verify="arrow" is used
-
 from pyspark.sql import DataFrame, functions as F
 
 
-def _cosine(a, b):
-    """Higher-order-function cosine (interpreted — fine for small inputs;
-    hot paths use the unrolled codegen variant below)."""
-    dot = F.aggregate(
+def _hof_dot(a, b):
+    """Dot product as one higher-order-function left fold,
+    ``aggregate(zip_with(a, b, x*y), 0.0, acc + v)``: the products are
+    added left to right from 0.0, the order of the DuckDB oracles'
+    left-associated unrolled sums, so every cosine is bit-identical to
+    theirs.  Every cosine in this module uses it.  Measured faster than
+    a ``dim``-term unrolled ``element_at`` sum at 64 dims: the unrolled
+    trees paid more in codegen and duplicated null checks at the join
+    sites (8-22 s at sf0.1) than interpreted evaluation (1.5-3.4 s)."""
+    return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-    n1 = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-    n2 = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v))
+
+
+def _cosine(a, b):
+    """Cosine of two ``array<double>`` columns."""
+    dot = _hof_dot(a, b)
+    n1 = F.sqrt(_hof_dot(a, a))
+    n2 = F.sqrt(_hof_dot(b, b))
     # try_divide: an all-zero vector has norm 0 and undefined cosine —
     # a plain division aborts the whole job under ANSI mode.  NULL
     # ranks last in top-k (desc is nulls-last) and fails every
     # threshold filter, so zero vectors drop cleanly.
     return F.try_divide(dot, n1 * n2)
-
-
-def _dot_unrolled(a: str, b: str, dim: int):
-    """Dot product as `dim` element_at terms — whole-stage-codegen'd,
-    unlike aggregate()/zip_with() lambdas which Spark interprets (~10×
-    slower in the all-pairs hot path).  try_element_at, not element_at:
-    under ANSI mode (the Spark 4 default) a single TRUNCATED embedding
-    row would abort the whole job on an out-of-bounds index; the try
-    variant NULLs the term, the dot goes NULL, and the NULL verdict
-    drops from threshold filters / ranks last in top-k — the same
-    convention as zero-norm vectors."""
-    return sum(
-        (F.try_element_at(a, F.lit(i + 1)) * F.try_element_at(b, F.lit(i + 1))
-         for i in range(dim)),
-        F.lit(0.0),
-    )
 
 
 def _vec_dim(df: DataFrame, vec_col: str) -> int:
@@ -68,16 +53,29 @@ def _vec_dim(df: DataFrame, vec_col: str) -> int:
     dirty corpus the first sampled row can itself be the truncated one,
     and a first-row inference would then invert the ``size(v) == dim``
     guard — dropping every valid row and keeping the garbage ones.
+    NULL embeddings are left out of the vote: under ANSI mode their size
+    is NULL, which would otherwise win on a mostly-NULL corpus and switch
+    the guard off.
 
     The mode is taken over a BOUNDED prefix (``limit``), not the whole
     corpus: a full groupBy(size) is a corpus scan + shuffle — a hidden
     100 TB pre-pass on a default argument.  10k rows pins the mode
     unless >50% of the prefix is dirty, at which point no inference is
-    trustworthy and the caller must pass ``dim=``."""
-    row = (df.select(F.size(vec_col).alias("d")).limit(10_000)
+    trustworthy and the caller must pass ``dim=``.  Raises
+    ``ValueError`` when there is no non-NULL embedding or when two sizes
+    tie for the mode."""
+    top = (df.where(F.col(vec_col).isNotNull())
+           .select(F.size(vec_col).alias("d")).limit(10_000)
            .groupBy("d").count()
-           .orderBy(F.desc("count"), F.asc("d")).first())
-    return row["d"]
+           .orderBy(F.desc("count"), F.asc("d")).take(2))
+    if not top:
+        raise ValueError(f"cannot infer the dimension of {vec_col!r}: no "
+                         f"non-NULL embedding; pass dim=")
+    if len(top) == 2 and top[0]["count"] == top[1]["count"]:
+        raise ValueError(f"cannot infer the dimension of {vec_col!r}: "
+                         f"sizes {top[0]['d']} and {top[1]['d']} tie for "
+                         f"the mode; pass dim=")
+    return top[0]["d"]
 
 
 # Deterministic pseudo-random hyperplanes for sign-sketch (SimHash-for-
@@ -140,107 +138,30 @@ def brute_force_topk(df: DataFrame, query: list[float], k: int = 10,
     return scored.orderBy(F.desc("cosine"), F.col(id_col)).limit(k)
 
 
-def _pair_dot_arrow():
-    """Arrow-batched per-pair dot product: one vectorized ``einsum`` per
-    Arrow batch instead of one interpreted HOF evaluation per row.  The
-    scale path for the verify stage — per-pair cost amortizes to a few ns
-    once candidate volume is large enough to pay the Python-worker round
-    trip (see :func:`lsh_cosine_neardup_pairs` ``verify=``)."""
-    if pd is None:  # pragma: no cover — deferred optional-dep error
-        raise ImportError(
-            "verify='arrow' requires pandas (an optional pyspark "
-            "dependency); install pandas or use verify='hof'")
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def pair_dot(va: pd.Series, vb: pd.Series) -> pd.Series:
-        if len(va) == 0:
-            return pd.Series([], dtype="float64")
-        # callers pre-filter both sides to the corpus dim, so batches
-        # are homogeneous on the fast path; the ragged fallback is
-        # defense-in-depth (a ragged batch would otherwise throw
-        # numpy's inhomogeneous-shape error and abort the JOB) — the
-        # mismatched row gets NaN, which fails every threshold filter
-        la, lb = va.map(len), vb.map(len)
-        if la.nunique() == 1 and lb.nunique() == 1 and la.iat[0] == lb.iat[0]:
-            A = np.array(va.tolist(), dtype="float64")
-            B = np.array(vb.tolist(), dtype="float64")
-            return pd.Series(np.einsum("ij,ij->i", A, B))
-        out = np.full(len(va), np.nan)
-        for i, (a, b) in enumerate(zip(va, vb)):
-            if len(a) == len(b):
-                out[i] = float(np.dot(np.asarray(a, dtype="float64"),
-                                      np.asarray(b, dtype="float64")))
-        return pd.Series(out)
-
-    # asNondeterministic — the function IS deterministic; the flag is
-    # the standard guard against expression DUPLICATION: the verify
-    # stage projects the cosine and then filters on it, and the
-    # optimizer inlines the projected column into the pushed-down
-    # filter, planning TWO ArrowEvalPython stages (every candidate pair
-    # paid the Python round-trip twice — observed in the r11 plan
-    # audit).  Nondeterministic expressions are never duplicated or
-    # pushed, so the dot is evaluated exactly once per pair (plan-gated:
-    # one ArrowEvalPython).  Placement restriction that buys: Spark
-    # REJECTS nondeterministic expressions in join conditions and
-    # aggregates, so this column is only legal inside a plain
-    # Project/Filter — reuse it elsewhere and the AnalysisException is
-    # this flag, not the function.
-    return pair_dot.asNondeterministic()
-
-
 def _exact_cosine_pairs(e: DataFrame, cand: DataFrame, threshold: float,
-                        verify: str, id_col: str,
-                        dim: int | None = None,
-                        round_to: int | None = None) -> DataFrame:
+                        id_col: str, dim: int) -> DataFrame:
     """Shared exact verify stage: join candidate ``(id_a, id_b)`` pairs
-    back to ``e`` = ``(id, v: array<double>)``, score cosine, filter.
-    Dot dispatch: ``"hof"`` = interpreted left-fold (bitwise equal to
-    the oracles' left-associated unrolled sums — the hash-exact form),
-    ``"arrow"`` = batched numpy ``einsum`` (the candidate-proportional
-    scale path; ≤1e-12 relative vs hof, pinned by test).  Norms stay
-    JVM-side either way — corpus-linear, never the bottleneck.
+    back to ``e`` = ``(id, v: array<double>)``, score cosine with the
+    :func:`_hof_dot` left fold (bit-equal to the oracles' left-associated
+    unrolled sums — the hash-exact form), filter.  Norms are computed
+    once per vector, before the pair joins.
 
-    ``dim`` enforces the dirty-data contract on the zip_with/einsum
-    dots, which would otherwise score SAME-LENGTH wrong-dimension rows
-    as if they were valid (two truncated ``[1.0]`` vectors zip to
-    cosine 1.0): wrong-dimension rows are filtered out of the verify
-    side, so their candidate pairs drop at the inner join — the same
-    fate the unrolled-dot paths give them via try_element_at NULLs.
-
-    ``round_to`` rounds the cosine to that many decimals BEFORE the
-    threshold filter (and emits the rounded value): the hash-parity
-    bridge between the dot implementations — hof's left fold and
-    arrow's pairwise-summed einsum differ in the last FP bits (≤1e-12
-    relative), so a raw-cosine comparison can flip a threshold-boundary
-    pair between engines, but both land on the same 9-decimal rounding
-    unless a pair sits within ~1e-12 of a half-ulp of the 9th decimal
-    (none does on the test corpus — verified empirically at
-    sf0.01/sf0.1)."""
-    def hdot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0), lambda acc, v: acc + v,
-        )
-
-    if dim is not None:
-        e = e.where(F.size("v") == int(dim))
-    normed = e.withColumn("nrm", F.sqrt(hdot(F.col("v"), F.col("v"))))
+    ``dim`` enforces the dirty-data contract on the ``zip_with`` dot,
+    which would otherwise score SAME-LENGTH wrong-dimension rows as if
+    they were valid (two truncated ``[1.0]`` vectors zip to cosine 1.0):
+    wrong-dimension rows are filtered out of the verify side, so their
+    candidate pairs drop at the inner join."""
+    normed = e.where(F.size("v") == int(dim)).withColumn(
+        "nrm", F.sqrt(_hof_dot(F.col("v"), F.col("v"))))
     na = normed.select(F.col(id_col).alias("id_a"), F.col("v").alias("va"),
                        F.col("nrm").alias("na"))
     nb = normed.select(F.col(id_col).alias("id_b"), F.col("v").alias("vb"),
                        F.col("nrm").alias("nb"))
-    if verify == "arrow":
-        dot = _pair_dot_arrow()(F.col("va"), F.col("vb"))
-    else:
-        dot = hdot(F.col("va"), F.col("vb"))
-    cos = F.try_divide(dot, F.col("na") * F.col("nb"))
-    if round_to is not None:
-        cos = F.round(cos, int(round_to))
     return (
         cand.join(na, "id_a").join(nb, "id_b")
-        .withColumn("cosine", cos)
+        .withColumn("cosine",
+                    F.try_divide(_hof_dot(F.col("va"), F.col("vb")),
+                                 F.col("na") * F.col("nb")))
         .filter(F.col("cosine") >= F.lit(float(threshold)))
         .select("id_a", "id_b", "cosine")
     )
@@ -520,9 +441,7 @@ def multiprobe_cell_pairs(df: DataFrame, threshold: float = 0.3,
                           id_col: str = "vec_id",
                           dim: int | None = None,
                           max_bucket: int = 10_000,
-                          max_hamming: int = 1,
-                          verify: str = "hof",
-                          round_to: int | None = None) -> DataFrame:
+                          max_hamming: int = 1) -> DataFrame:
     """Multi-probe near-dup pairs over the scale-coupled cells: every
     pair whose cell codes differ in AT MOST ``max_hamming`` sign bits
     is candidate, then exactly verified — the standard multi-probe LSH
@@ -564,8 +483,6 @@ def multiprobe_cell_pairs(df: DataFrame, threshold: float = 0.3,
 
     if max_hamming not in (1, 2):
         raise ValueError(f"max_hamming must be 1 or 2, got {max_hamming}")
-    if verify not in ("hof", "arrow"):
-        raise ValueError(f"verify must be hof|arrow, got {verify!r}")
     dim = dim or _vec_dim(df, vec_col)
     if n_cells is None:
         n_cells = scaled_cells(df.count(), target_occupancy)
@@ -592,8 +509,7 @@ def multiprobe_cell_pairs(df: DataFrame, threshold: float = 0.3,
         .distinct()
     )
     e = df.select(F.col(id_col), _as_double(vec_col).alias("v"))
-    return _exact_cosine_pairs(e, cand, threshold, verify, id_col, dim,
-                               round_to=round_to)
+    return _exact_cosine_pairs(e, cand, threshold, id_col, dim)
 
 
 def semantic_incremental_pairs(store: DataFrame | None,
@@ -695,16 +611,14 @@ def semantic_incremental_pairs(store: DataFrame | None,
     if store is not None:
         e = store.select(
             F.col(id_col), _as_double(vec_col).alias("v")).unionByName(e)
-    return _exact_cosine_pairs(e, cand, threshold, "hof", id_col, dim)
+    return _exact_cosine_pairs(e, cand, threshold, id_col, dim)
 
 
 def lsh_cosine_neardup_pairs(df: DataFrame, threshold: float = 0.2,
                              n_planes: int = 32, bands: int = 4,
                              vec_col: str = "embedding",
                              id_col: str = "vec_id",
-                             dim: int | None = None,
-                             verify: str = "hof",
-                             arrow_min_pairs: int = 2_000_000) -> DataFrame:
+                             dim: int | None = None) -> DataFrame:
     """Cosine near-dup pairs via random-hyperplane LSH blocking + exact
     in-bucket verify — the 100-TB-safe shape (every join is an equi-join;
     no all-pairs/nested-loop stage anywhere in the plan).
@@ -713,37 +627,15 @@ def lsh_cosine_neardup_pairs(df: DataFrame, threshold: float = 0.2,
        projections (one narrow codegen'd pass over the corpus);
     2. block: bits grouped into ``bands`` keys; candidates = equi-self-join
        on (band_id, band_key) — only same-bucket vectors ever meet;
-    3. verify: exact unrolled cosine on the candidate pairs only.
+    3. verify: exact cosine on the candidate pairs only
+       (:func:`_exact_cosine_pairs`, the :func:`_hof_dot` left fold).
 
     Recall is the standard LSH curve 1-(1-p^r)^b with p = 1 - θ/π; size
     ``n_planes``/``bands`` for the corpus (more bits per band → smaller
     buckets at scale, more bands → recall).  At production scale the
     sketch table is written bucketed by band key so the self-join is
     shuffle-free.  Deterministic: the DuckDB oracle reproduces the exact
-    result (same weights, same FP order) from independent SQL.
-
-    ``verify`` selects the exact-dot implementation for step 3:
-
-    * ``"hof"`` (default) — interpreted higher-order-function left-fold.
-      Measured fastest at bench scale (64-term unrolled codegen trees pay
-      compile + duplicated null checks at the join sites), and its
-      left-associated FP order matches the DuckDB oracle bit-for-bit.
-    * ``"arrow"`` — Arrow-batched pandas-UDF ``einsum``: one vectorized
-      numpy dot per batch, a narrow Arrow stage between the two candidate
-      joins.  The scale path: at 100× candidate volume the per-row
-      interpreted eval is the data-proportional cost and the batched dot
-      wins.  numpy's pairwise summation differs from the left fold in the
-      last FP bits (equivalence ≤1e-12 relative, pinned by test), so
-      threshold-boundary pairs can differ — the hash-exact driver query
-      keeps ``"hof"``.
-    * ``"auto"`` — scale-triggered: materializes the candidate pair list
-      once (eager ``localCheckpoint`` — GC-cleaned, never pinned in the
-      session cache; O(pairs) driver cost, same barrier rationale as
-      ``pair_shingle_stats``) and picks ``"arrow"`` when it holds at
-      least ``arrow_min_pairs`` pairs, else ``"hof"``.
-    """
-    if verify not in ("hof", "arrow", "auto"):
-        raise ValueError(f"verify must be hof|arrow|auto, got {verify!r}")
+    result (same weights, same FP order) from independent SQL."""
     dim = dim or _vec_dim(df, vec_col)
     rpb = n_planes // bands
     W = hyperplane_weights(n_planes, dim)
@@ -785,68 +677,25 @@ def lsh_cosine_neardup_pairs(df: DataFrame, threshold: float = 0.2,
     cand = _bucket_pairs(stacked, id_col, ["band_id", "k"]).select(
         F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b")
     )
-    if verify == "auto":
-        # materialize the pair list once (it feeds both the count and the
-        # verify joins below — without the barrier the branches recompute
-        # the LSH chain) and let its size pick the dot implementation.
-        # localCheckpoint (eager), NOT persist: the materialized pair list
-        # is cleaned up by Spark's ContextCleaner when the DataFrame goes
-        # out of scope, instead of pinning session storage memory until an
-        # explicit unpersist/clearCache the (lazy) return value could
-        # never schedule.  Trade-off: checkpoint blocks are executor-local
-        # and lineage is truncated, so losing an executor between the
-        # barrier and the verify joins fails the query instead of
-        # recomputing (persist recovered transparently).  On clusters with
-        # preemptible executors / aggressive dynamic allocation, pass
-        # verify="hof"/"arrow" explicitly — the auto barrier is the only
-        # checkpointed stage on this path.
-        cand = cand.localCheckpoint()
-        verify = "arrow" if cand.count() >= arrow_min_pairs else "hof"
-
-    # HOF left-fold dot rather than `_dot_unrolled` at bench scale:
-    # measured at sf0.1 the 64-term unrolled trees cost more in codegen +
-    # duplicated isnotnull evaluation at the join sites (8-22s) than
-    # interpreted HOF eval (1.5-3.4s); see :func:`_exact_cosine_pairs`
-    # for the shared verify stage and the arrow dispatch.
-    return _exact_cosine_pairs(e, cand, threshold, verify, id_col, dim)
+    return _exact_cosine_pairs(e, cand, threshold, id_col, dim)
 
 
 def cosine_neardup_pairs(df: DataFrame, threshold: float = 0.95,
                          vec_col: str = "embedding",
                          id_col: str = "vec_id",
                          dim: int | None = None) -> DataFrame:
-    """All-pairs cosine above a threshold — the exact VERIFY stage for a
-    pre-blocked candidate set (or tiny corpora).  O(n²): never run this on
-    a full corpus; the registered near-dup query uses
-    :func:`lsh_cosine_neardup_pairs`.  Norms are precomputed per vector
-    (narrow pass) and the per-pair dot product is unrolled to codegen'd
-    element_at terms."""
+    """All-pairs cosine above a threshold, for tiny corpora: the exact
+    verify stage (:func:`_exact_cosine_pairs`) over every ``id_a <
+    id_b`` pair of ``df``'s ids.  O(n²): never run this on a full
+    corpus; the registered near-dup query uses
+    :func:`lsh_cosine_neardup_pairs`."""
     dim = dim or _vec_dim(df, vec_col)
-    # size(v) == dim pre-filter, matching _exact_cosine_pairs: without it
-    # a LONGER-than-dim vector still gets a real cosine over its
-    # truncated prefix (a [1,0,junk…] row would pair with [1,0] at 1.0)
-    # — a fabricated verdict under the "garbage loses its row, never
-    # fabricates" contract.
-    normed = df.where(F.size(vec_col) == dim).select(
-        F.col(id_col),
-        _as_double(vec_col).alias("v"),
-    ).withColumn(
-        "nrm", F.sqrt(_dot_unrolled("v", "v", dim))
-    )
-    a = normed.select(F.col(id_col).alias("id_a"), F.col("v").alias("va"),
-                      F.col("nrm").alias("na"))
-    b = normed.select(F.col(id_col).alias("id_b"), F.col("v").alias("vb"),
-                      F.col("nrm").alias("nb"))
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cosine",
-            F.try_divide(_dot_unrolled("va", "vb", dim),
-                         F.col("na") * F.col("nb"))
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
+    ids = df.select(id_col)
+    cand = ids.select(F.col(id_col).alias("id_a")).join(
+        ids.select(F.col(id_col).alias("id_b")),
+        F.col("id_a") < F.col("id_b"))
+    e = df.select(F.col(id_col), _as_double(vec_col).alias("v"))
+    return _exact_cosine_pairs(e, cand, threshold, id_col, dim)
 
 
 def within_cluster_cosine_pairs(assigned: DataFrame,
@@ -854,9 +703,7 @@ def within_cluster_cosine_pairs(assigned: DataFrame,
                                 vec_col: str = "embedding",
                                 id_col: str = "vec_id",
                                 cluster_col: str = "cluster",
-                                verify: str = "hof",
-                                dim: int | None = None,
-                                round_to: int | None = None) -> DataFrame:
+                                dim: int | None = None) -> DataFrame:
     """Exact cosine pairs WITHIN each cluster of a pre-assigned corpus —
     the SemDeDup blocking step (Abbas et al. 2023, "SemDeDup: Data-
     efficient learning at web-scale through semantic deduplication"):
@@ -867,15 +714,11 @@ def within_cluster_cosine_pairs(assigned: DataFrame,
     Pair generation reuses the bucket-groupBy explosion
     (:func:`dedup._bucket_pairs` — ONE shuffle on the cluster key, no
     self-join, hot-bucket chunk-grid for degenerate clusters); the
-    verify-stage dot is the HOF left-fold matching the DuckDB oracle's
-    unrolled sum bit-for-bit (``verify="arrow"`` switches to the
-    Arrow-batched numpy dot — same tradeoff as
-    :func:`lsh_cosine_neardup_pairs`; the in-cluster pair volume is the
-    data-proportional cost at scale).  At 100 TB the assigned corpus is
-    written partitioned by cluster (:meth:`IVFIndex.write_index`), so
-    each cluster's pair stage reads one directory."""
-    if verify not in ("hof", "arrow"):
-        raise ValueError(f"verify must be hof|arrow, got {verify!r}")
+    verify stage is :func:`_exact_cosine_pairs`, whose left-fold dot
+    matches the DuckDB oracle's unrolled sum bit-for-bit.  At 100 TB the
+    assigned corpus is written partitioned by cluster
+    (:meth:`IVFIndex.write_index`), so each cluster's pair stage reads
+    one directory."""
     from petropandas_spark.pipeline.dedup import _bucket_pairs
 
     cand = _bucket_pairs(
@@ -888,8 +731,7 @@ def within_cluster_cosine_pairs(assigned: DataFrame,
     # the job, and never fabricates a verdict)
     dim = dim or _vec_dim(assigned, vec_col)
     e = assigned.select(F.col(id_col), _as_double(vec_col).alias("v"))
-    return _exact_cosine_pairs(e, cand, threshold, verify, id_col, dim,
-                               round_to=round_to)
+    return _exact_cosine_pairs(e, cand, threshold, id_col, dim)
 
 
 class IVFIndex:

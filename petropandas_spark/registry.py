@@ -4432,40 +4432,6 @@ FROM e
 """,
     )
 
-    # the PRODUCTION verify dot driven through the driver gate (r10
-    # verdict item 3): same scaled-cell candidate derivation as
-    # semantic_dedup_groups_scaled, but the exact verify runs the
-    # Arrow-batched numpy einsum (the candidate-proportional scale
-    # path) instead of the interpreted hof fold.  numpy's pairwise
-    # summation differs from the left fold in the last FP bits
-    # (≤1e-12 relative), so BOTH engines round the cosine to 9
-    # decimals BEFORE the threshold filter — differences that small
-    # survive rounding identically unless a pair sits within ~1e-12
-    # of a half-ulp of the 9th decimal (none does on this corpus:
-    # verified at sf0.01/sf0.1).  The hof twin queries stay registered
-    # as the bit-exact anchors.
-    def sem_arrow_fn(spark, sf_dir):
-        emb = _load(spark, sf_dir, "embeddings")
-        # barrier = scan-once, not recompute-avoidance (see the
-        # scaled-groups comment above for the r11 A/B)
-        assigned = _sim.scaled_sign_clusters(emb).localCheckpoint()
-        return _sim.within_cluster_cosine_pairs(
-            assigned, threshold=0.3, verify="arrow", round_to=9)
-
-    _ar_dot = _dot_sql("na.v", "nb.v", DUCKDB)
-    out["semantic_neardup_arrow"] = QuerySpec(
-        sem_arrow_fn,
-        f"""
-WITH
-{_scaled_cluster_ctes()}
-SELECT na.vec_id AS id_a, nb.vec_id AS id_b,
-       ROUND({_ar_dot} / (na.nrm * nb.nrm), 9) AS cosine
-FROM n na JOIN n nb
-  ON na.cluster = nb.cluster AND na.vec_id < nb.vec_id
-WHERE ROUND({_ar_dot} / (na.nrm * nb.nrm), 9) >= 0.3e0
-""",
-    )
-
     # Hamming≤2 multi-probe (r10 verdict item 4): the recall knob for
     # deep fanouts / hard thresholds — candidate multiplier
     # 1 + b + C(b,2) = O(log²N), still never all-pairs.  Same pure

@@ -1049,55 +1049,6 @@ class TestSimilarity:
         pairs = {(r.id_a, r.id_b) for r in out}
         assert {(i, 100 + i) for i in range(40)} <= pairs
 
-    def test_lsh_cosine_arrow_verify_matches_hof(self, spark):
-        """The Arrow-batched verify path (scale form) agrees with the
-        HOF fold: identical pair set, cosines within 1e-12 relative
-        (numpy pairwise summation vs left fold differ only in the last
-        FP bits).  The plan gates pin the shape: the arrow form runs the
-        dot in a narrow ArrowEvalPython stage, the default HOF form
-        stays fully JVM-side."""
-        import numpy as np
-
-        rs = np.random.RandomState(11)
-        base = rs.normal(size=(30, 16))
-        rows = [(i, base[i].tolist()) for i in range(30)]
-        rows += [
-            (100 + i, (base[i] + rs.normal(scale=1e-3, size=16)).tolist())
-            for i in range(30)
-        ]
-        df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-        kw = dict(threshold=0.9, n_planes=32, bands=4, dim=16)
-        hof_df = similarity.lsh_cosine_neardup_pairs(df, verify="hof", **kw)
-        arr_df = similarity.lsh_cosine_neardup_pairs(df, verify="arrow", **kw)
-        hof = {(r.id_a, r.id_b): r.cosine for r in hof_df.collect()}
-        arr = {(r.id_a, r.id_b): r.cosine for r in arr_df.collect()}
-        assert set(hof) == set(arr) and len(hof) >= 30
-        for k in hof:
-            assert abs(hof[k] - arr[k]) <= 1e-12 * max(1.0, abs(hof[k]))
-        from tests.test_plan_quality import _plan
-        arr_plan = _plan(arr_df)
-        hof_plan = _plan(hof_df)
-        assert "ArrowEvalPython" in arr_plan
-        assert "ArrowEvalPython" not in hof_plan
-        assert "BatchEvalPython" not in arr_plan  # vectorized, not per-row
-        # auto mode: tiny candidate volume stays HOF (JVM-side plan);
-        # a floor of 1 flips it to the arrow stage
-        spark.catalog.clearCache()  # isolate the leak check below
-        auto_small = similarity.lsh_cosine_neardup_pairs(
-            df, verify="auto", arrow_min_pairs=10**9, **kw)
-        auto_flip = similarity.lsh_cosine_neardup_pairs(
-            df, verify="auto", arrow_min_pairs=1, **kw)
-        assert "ArrowEvalPython" not in _plan(auto_small)
-        assert "ArrowEvalPython" in _plan(auto_flip)
-        assert {(r.id_a, r.id_b) for r in auto_flip.collect()} == set(hof)
-        # auto's pair-list barrier is an eager localCheckpoint, NOT a
-        # persist — nothing may remain pinned in the session cache for
-        # the caller to clean up (round-4 advice: the persist leaked)
-        jcat = spark._jsparkSession.sharedState().cacheManager()
-        assert jcat.isEmpty(), "verify='auto' leaked a cached DataFrame"
-        with pytest.raises(ValueError, match="hof\\|arrow\\|auto"):
-            similarity.lsh_cosine_neardup_pairs(df, verify="numpy", **kw)
-
     def test_semantic_dedup_within_cluster(self, spark):
         """SemDeDup blocking: planted near-identical vectors land in the
         same fixed-centroid cluster and form a duplicate group labeled
@@ -1133,14 +1084,6 @@ class TestSimilarity:
         all_pairs = similarity.within_cluster_cosine_pairs(assigned, -1.0)
         for r in all_pairs.collect():
             assert clusters[r.id_a] == clusters[r.id_b]
-        # arrow verify path: identical pair set, cosines within 1e-12
-        arrow = {(r.id_a, r.id_b): r.cosine
-                 for r in similarity.within_cluster_cosine_pairs(
-                     assigned, 0.99, verify="arrow").collect()}
-        hof = {(r.id_a, r.id_b): r.cosine for r in pairs.collect()}
-        assert set(arrow) == set(hof)
-        for k in hof:
-            assert abs(arrow[k] - hof[k]) <= 1e-12 * max(1.0, abs(hof[k]))
 
     def test_cosine_neardup_pairs_symmetry(self, spark):
         pdf = pd.DataFrame({
@@ -1172,12 +1115,9 @@ class TestSimilarity:
         # TWO truncated rows of the SAME length share every LSH bucket
         # (their sketch sums skip the NULL terms identically) and would
         # zip to a fabricated cosine of 1.0 — the corpus-dim filter in
-        # the verify stage must drop the pair on both verify dispatches
-        for verify in ("hof", "arrow"):
-            lsh = similarity.lsh_cosine_neardup_pairs(
-                e, threshold=0.99, dim=2, verify=verify)
-            assert ({(r.id_a, r.id_b) for r in lsh.collect()}
-                    <= {(1, 2)}), verify
+        # the verify stage must drop the pair
+        lsh = similarity.lsh_cosine_neardup_pairs(e, threshold=0.99, dim=2)
+        assert {(r.id_a, r.id_b) for r in lsh.collect()} <= {(1, 2)}
         # SemDeDup blocking: truncated rows land in the NULL cluster
         # together; their in-cluster pair must also drop
         idx = similarity.IVFIndex(k=2)
@@ -1231,6 +1171,30 @@ class TestSimilarity:
                  similarity.cosine_neardup_pairs(e, threshold=0.99)
                  .collect()}
         assert pairs == {(2, 3)}  # valid rows pair; row 1 loses its row
+        # NULL embeddings do not vote: under ANSI their size is NULL,
+        # which would win the mode of a mostly-NULL corpus and switch the
+        # guard off (the two truncated [1.0] rows then paired at 1.0).
+        # Here sizes 2 and 1 tie among the non-NULL rows, so no dim can
+        # be trusted and the caller is told to pass one.
+        schema = "vec_id long, embedding array<double>"
+        rows = [(i, None) for i in (1, 2, 3)] + [
+            (4, [1.0, 0.0]), (5, [0.999, 0.01]), (6, [1.0]), (7, [1.0])]
+        nulls = spark.createDataFrame(rows, schema) \
+            .withColumn("cluster", F.lit(0))
+        with pytest.raises(ValueError, match="dim="):
+            similarity.within_cluster_cosine_pairs(nulls, threshold=0.99)
+        within = similarity.within_cluster_cosine_pairs(
+            nulls, threshold=0.99, dim=2)
+        assert {(r.id_a, r.id_b) for r in within.collect()} == {(4, 5)}
+        more = nulls.unionByName(spark.createDataFrame(
+            [(8, [0.5, 0.5])], schema).withColumn("cluster", F.lit(0)))
+        assert similarity._vec_dim(more, "embedding") == 2
+        within = similarity.within_cluster_cosine_pairs(more, threshold=0.99)
+        assert {(r.id_a, r.id_b) for r in within.collect()} == {(4, 5)}
+        # nothing to infer from: a ValueError naming dim=, not a TypeError
+        with pytest.raises(ValueError, match="dim="):
+            similarity._vec_dim(spark.createDataFrame([], schema),
+                                "embedding")
 
     def test_longer_vector_does_not_fabricate_cosine(self, spark):
         """A LONGER-than-dim vector must not score over its truncated

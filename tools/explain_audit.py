@@ -32,7 +32,6 @@ AUDIT = [
     "semantic_neardup_multiprobe",  # Hamming-1 probe recall recovery
     "semantic_neardup_multiprobe_h2",  # Hamming-2 probe knob (r11)
     "semantic_epoch_compaction",    # partition-local store re-block (r11)
-    "semantic_neardup_arrow",       # Arrow einsum verify path (r11)
     "semantic_dedup_survivors_ranked",  # norm-ranked keeper window (r11)
     "semantic_cell_occupancy",      # occupancy histogram observability (r11)
     "corpus_semantic_curated",      # cross-modal keeper join (r11)

@@ -65,7 +65,6 @@ QUERIES = [
     "semantic_neardup_multiprobe",
     "semantic_neardup_multiprobe_h2",
     "semantic_epoch_compaction",
-    "semantic_neardup_arrow",
     "semantic_dedup_survivors_ranked",
     "semantic_cell_occupancy",
     "corpus_semantic_curated",
