@@ -13,6 +13,8 @@ Reference citations are per-function into
 
 from __future__ import annotations
 
+from fractions import Fraction
+
 import numpy as np
 
 from petropandas_spark import core
@@ -186,23 +188,44 @@ SPINEL = MineralConfig(
 # E2 GarnetFe3 — matrix inversion via precomputed normal equations
 # ---------------------------------------------------------------------------
 
-# Ideal cation matrix A (7 cations × 6 end-members, ref ``_minerals.py:324-335``).
-_GRTFE3_A = np.array(
-    [
-        # Ca Mg Fe Cr Mn Al Si
-        [0, 3, 0, 0, 0, 2, 3],  # Prp
-        [0, 0, 3, 0, 0, 2, 3],  # Alm
-        [0, 0, 0, 0, 3, 2, 3],  # Sps
-        [3, 0, 0, 0, 0, 2, 3],  # Grs
-        [3, 0, 2, 0, 0, 0, 3],  # Adr
-        [3, 0, 0, 2, 0, 0, 3],  # Uvr
-    ],
-    dtype=float,
-).T
-# A is full-rank, so the lstsq solution is x = (AᵀA)⁻¹Aᵀ·b — a constant 6×7
+def _exact_pinv(a_t: list[list[int]]) -> np.ndarray:
+    """(AᵀA)⁻¹Aᵀ of a full-column-rank INTEGER matrix A, given as its rows
+    of Aᵀ, by Gauss-Jordan elimination in exact rational arithmetic.
+
+    Each coefficient is rounded once, ``float(Fraction)``, to the nearest
+    double, so the literals are the same on every host; a floating-point
+    solve (``np.linalg.solve``) leaves last digits that depend on the
+    BLAS/LAPACK build and CPU."""
+    n, m = len(a_t), len(a_t[0])
+    # augmented [AᵀA | Aᵀ]
+    rows = [[Fraction(sum(x * y for x, y in zip(a_t[i], a_t[j])))
+             for j in range(n)] + [Fraction(v) for v in a_t[i]]
+            for i in range(n)]
+    for c in range(n):
+        p = next(r for r in range(c, n) if rows[r][c] != 0)
+        rows[c], rows[p] = rows[p], rows[c]
+        rows[c] = [v / rows[c][c] for v in rows[c]]
+        for r in range(n):
+            if r != c and rows[r][c] != 0:
+                f = rows[r][c]
+                rows[r] = [v - f * w for v, w in zip(rows[r], rows[c])]
+    return np.array([[float(v) for v in row[n:n + m]] for row in rows])
+
+
+# Ideal cation matrix A (7 cations × 6 end-members, ref
+# ``_minerals.py:324-335``), written as Aᵀ: one row per end-member.  A is
+# full-rank, so the lstsq solution is x = (AᵀA)⁻¹Aᵀ·b — a constant 6×7
 # pseudoinverse, computed once on the driver and folded into literals
 # (SURVEY.md §2.6 E2: "expression form is Catalyst-native").
-_GRTFE3_PINV = np.linalg.solve(_GRTFE3_A.T @ _GRTFE3_A, _GRTFE3_A.T)
+_GRTFE3_PINV = _exact_pinv([
+    # Ca Mg Fe Cr Mn Al Si
+    [0, 3, 0, 0, 0, 2, 3],  # Prp
+    [0, 0, 3, 0, 0, 2, 3],  # Alm
+    [0, 0, 0, 0, 3, 2, 3],  # Sps
+    [3, 0, 0, 0, 0, 2, 3],  # Grs
+    [3, 0, 2, 0, 0, 0, 3],  # Adr
+    [3, 0, 0, 2, 0, 0, 3],  # Uvr
+])
 _GRTFE3_EM = ["Prp", "Alm", "Sps", "Grs", "Adr", "Uvr"]
 
 

@@ -1753,10 +1753,12 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
         # ``prev`` is the label entering the LAST fused round; a full
         # round that changes nothing is a fixed point, so checking only
         # the last round is exact (propagation is monotone: an identity
-        # round can never be followed by a changing one).
-        changed = stepped.filter(
-            F.col("lab") != F.col("prev")
-        ).limit(1).count()
+        # round can never be followed by a changing one).  A plain count,
+        # not ``limit(1).count()``: every limit operator names its
+        # generated row counter from a JVM-global sequence, so a limit
+        # stage compiles a fresh class on each call and can never hit
+        # the codegen class cache; the checkpointed labels scan cheaply.
+        changed = stepped.filter(F.col("lab") != F.col("prev")).count()
         labels = stepped
         converged = changed == 0
         if converged:

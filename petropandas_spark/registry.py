@@ -4193,7 +4193,8 @@ ORDER BY dist, vec_id LIMIT 10
     # deterministic algorithm → hash-exact.
     def cosine_pairs(spark, sf_dir):
         emb = _load(spark, sf_dir, "embeddings")
-        return _sim.lsh_cosine_neardup_pairs(emb, threshold=0.2, dim=64)
+        return _sim.lsh_cosine_neardup_pairs(emb, threshold=0.2,
+                                             dim=EMB_DIM)
 
     out["cosine_neardup_pairs"] = QuerySpec(cosine_pairs, _lsh_cosine_oracle())
 
@@ -4216,7 +4217,8 @@ ORDER BY dist, vec_id LIMIT 10
         # distance argmin (512 squared-diff terms) — measured 2× the whole
         # query at sf0.1.  localCheckpoint: GC-cleaned, values unchanged.
         assigned = idx.assign(emb).localCheckpoint()
-        pairs = _sim.within_cluster_cosine_pairs(assigned, threshold=0.3)
+        pairs = _sim.within_cluster_cosine_pairs(assigned, threshold=0.3,
+                                                 dim=EMB_DIM)
         comps = _dd.connected_components(
             emb.select("vec_id"), pairs,
             id_col="vec_id", a_col="id_a", b_col="id_b",
@@ -4300,8 +4302,10 @@ FROM sized WHERE n_members >= 2
         # scan — 3× corpus I/O at 100 TB, where the production answer
         # is write-partitioned-by-cluster-once (similarity docstrings)
         # and this checkpoint is the in-session equivalent.
-        assigned = _sim.scaled_sign_clusters(emb).localCheckpoint()
-        pairs = _sim.within_cluster_cosine_pairs(assigned, threshold=0.3)
+        assigned = _sim.scaled_sign_clusters(
+            emb, dim=EMB_DIM).localCheckpoint()
+        pairs = _sim.within_cluster_cosine_pairs(assigned, threshold=0.3,
+                                                 dim=EMB_DIM)
         comps = _dd.connected_components(
             emb.select("vec_id"), pairs,
             id_col="vec_id", a_col="id_a", b_col="id_b",
@@ -4330,7 +4334,7 @@ FROM sized WHERE n_members >= 2
         return _sim.semantic_incremental_pairs(
             emb.where("vec_id % 10 < 8"),
             emb.where("vec_id % 10 >= 8"),
-            threshold=0.3,
+            threshold=0.3, dim=EMB_DIM,
         )
 
     out["semantic_incremental_pairs"] = QuerySpec(
@@ -4346,7 +4350,7 @@ FROM sized WHERE n_members >= 2
     # cluster_b)) <= 1 — no explosion needed on the oracle side.
     def sem_multiprobe_fn(spark, sf_dir):
         emb = _load(spark, sf_dir, "embeddings")
-        return _sim.multiprobe_cell_pairs(emb, threshold=0.3)
+        return _sim.multiprobe_cell_pairs(emb, threshold=0.3, dim=EMB_DIM)
 
     _mp_dot = _dot_sql("na.v", "nb.v", DUCKDB)
     _mp_pair_sql = f"""SELECT na.vec_id AS id_a, nb.vec_id AS id_b,
@@ -4372,7 +4376,7 @@ WITH
         from pyspark.sql import functions as F
 
         emb = _load(spark, sf_dir, "embeddings")
-        pairs = _sim.multiprobe_cell_pairs(emb, threshold=0.3)
+        pairs = _sim.multiprobe_cell_pairs(emb, threshold=0.3, dim=EMB_DIM)
         comps = _dd.connected_components(
             emb.select("vec_id"), pairs,
             id_col="vec_id", a_col="id_a", b_col="id_b",
@@ -4407,8 +4411,8 @@ SELECT vec_id FROM comp WHERE vec_id = component
     # equals fresh assignment at the new fanout.
     def sem_compact_fn(spark, sf_dir):
         emb = _load(spark, sf_dir, "embeddings")
-        a16 = _sim.scaled_sign_clusters(emb, n_cells=16)
-        return _sim.compact_epoch(a16, 16, 64) \
+        a16 = _sim.scaled_sign_clusters(emb, n_cells=16, dim=EMB_DIM)
+        return _sim.compact_epoch(a16, 16, 64, dim=EMB_DIM) \
             .select("vec_id", "cluster")
 
     _cw = _sim.hyperplane_weights(6, EMB_DIM)
@@ -4439,7 +4443,7 @@ FROM e
     def sem_multiprobe2_fn(spark, sf_dir):
         emb = _load(spark, sf_dir, "embeddings")
         return _sim.multiprobe_cell_pairs(emb, threshold=0.3,
-                                          max_hamming=2)
+                                          max_hamming=2, dim=EMB_DIM)
 
     _mp2_pair_sql = _mp_pair_sql.replace(
         "AS BIGINT)) <= 1", "AS BIGINT)) <= 2")
@@ -4471,7 +4475,7 @@ WITH
         from pyspark.sql import functions as F
 
         emb = _load(spark, sf_dir, "embeddings")
-        pairs = _sim.multiprobe_cell_pairs(emb, threshold=0.3)
+        pairs = _sim.multiprobe_cell_pairs(emb, threshold=0.3, dim=EMB_DIM)
         comps = _dd.connected_components(
             emb.select("vec_id"), pairs,
             id_col="vec_id", a_col="id_a", b_col="id_b",
@@ -4533,7 +4537,7 @@ FROM ranked WHERE rk = 1 AND n_members >= 2
         from pyspark.sql import functions as F
 
         emb = _load(spark, sf_dir, "embeddings")
-        assigned = _sim.scaled_sign_clusters(emb)
+        assigned = _sim.scaled_sign_clusters(emb, dim=EMB_DIM)
         return (
             assigned.groupBy("cluster")
             .agg(F.count(F.lit(1)).alias("occupancy"))
@@ -4567,7 +4571,7 @@ GROUP BY occupancy
 
         docs = _load(spark, sf_dir, "documents")
         emb = _load(spark, sf_dir, "embeddings")
-        pairs = _sim.multiprobe_cell_pairs(emb, threshold=0.3)
+        pairs = _sim.multiprobe_cell_pairs(emb, threshold=0.3, dim=EMB_DIM)
         comps = _dd.connected_components(
             emb.select("vec_id"), pairs,
             id_col="vec_id", a_col="id_a", b_col="id_b",

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import SparkSession
 
 from petropandas_spark import core
+from petropandas_spark.session import CODEGEN_CONFS
 
 
 @pytest.fixture(scope="session")
@@ -21,6 +22,9 @@ def spark():
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "4g")
+        # the engine's codegen class-cache bound; the worker-pool confs
+        # stay out (the preload daemon has tests of its own)
+        .config(map=CODEGEN_CONFS)
         .getOrCreate()
     )
     yield spark

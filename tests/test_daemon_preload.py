@@ -64,7 +64,8 @@ spark.stop()
 def test_session_helper_pins_worker_pool_confs():
     """The engine session helper (r15: the worker-pool fix belongs to
     the library, not the bench) carries exactly the two configs the r14
-    probe matrix proved are BOTH needed, bench.py consumes the helper
+    probe matrix proved are BOTH needed plus the codegen class-cache
+    bound, and applies both sets; bench.py consumes the helper
     instead of spelling raw configs, and the PYTHONPATH export makes
     the daemon module resolvable by the JVM-spawned daemon."""
     from petropandas_spark import session as ps_session
@@ -85,7 +86,11 @@ def test_session_helper_pins_worker_pool_confs():
             return self
 
     b = ps_session.apply_worker_pool_confs(FakeBuilder())
-    assert b.confs == ps_session.WORKER_POOL_CONFS
+    assert ps_session.CODEGEN_CONFS == {
+        "spark.sql.codegen.cache.maxEntries": "4096",
+    }
+    assert b.confs == {**ps_session.WORKER_POOL_CONFS,
+                       **ps_session.CODEGEN_CONFS}
     repo = os.path.dirname(os.path.dirname(
         os.path.abspath(ps_session.__file__)))
     assert repo in os.environ.get("PYTHONPATH", "").split(os.pathsep)

@@ -32,6 +32,25 @@ class TestGarnetFe3:
         "MnO": [0.00, 2.00, 0.50],
     }
 
+    def test_pseudoinverse_literals(self):
+        """The folded (AᵀA)⁻¹Aᵀ literals are the exact pseudoinverse,
+        M/474 for an integer M, each entry rounded once to the nearest
+        double (a LAPACK solve misses the last bit of most entries, by an
+        amount that depends on the BLAS build), and a left inverse of A."""
+        import numpy as np
+
+        m = np.array([[-18, 140, -18, -18, -18, -18, 30],
+                      [-74, -74, 84, 84, -74, 84, 18],
+                      [-18, -18, -18, -18, 140, -18, 30],
+                      [83, -75, -75, -75, -75, 162, -33],
+                      [84, 84, 84, -153, 84, -153, 18],
+                      [-27, -27, -27, 210, -27, -27, 45]])
+        assert np.array_equal(me._GRTFE3_PINV, m / 474)
+        a = np.array([[0, 3, 0, 0, 0, 2, 3], [0, 0, 3, 0, 0, 2, 3],
+                      [0, 0, 0, 0, 3, 2, 3], [3, 0, 0, 0, 0, 2, 3],
+                      [3, 0, 2, 0, 0, 0, 3], [3, 0, 0, 2, 0, 0, 3]]).T
+        assert np.array_equal(m @ a, 474 * np.eye(6, dtype=int))
+
     def test_columns_and_sum(self, spark):
         out = _em(spark, self.DATA, me.GARNETFE3)
         assert set(out.columns) == {"Prp", "Alm", "Sps", "Grs", "Adr", "Uvr"}

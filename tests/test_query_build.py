@@ -1,7 +1,8 @@
 """How a query is built: ``Plan.apply`` runs one ``spark.sql`` per plan
 over a temporary view it always drops, identifiers with quote characters
 survive that one statement in both dialects, ``registry._load`` reuses
-the inferred schema of an unchanged parquet file, and the DuckDB oracle
+the inferred schema of an unchanged parquet file, a semantic query
+builds without inferring the embedding dimension, and the DuckDB oracle
 text of every registry query stays byte-identical."""
 
 from __future__ import annotations
@@ -238,6 +239,27 @@ def test_events_ts_stays_bigint_nanoseconds(spark, tmp_path):
         df = _load(spark, str(tmp_path), "events")
         assert dict(df.dtypes)["ts"] == "bigint"
         assert df.first()["ts"] == ns
+
+
+def test_semantic_query_build_infers_no_dimension(spark, tmp_path):
+    """The registry passes the corpus dimension to the similarity calls,
+    so building ``semantic_incremental_pairs`` starts only the store
+    count that sizes the cell fanout (one count is two jobs under AQE),
+    not the two ``_vec_dim`` inference jobs besides."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    vecs = [[((i * 31 + j * 7) % 13 - 6) / 6 for j in range(64)]
+            for i in range(40)]
+    pq.write_table(pa.table({
+        "vec_id": pa.array(range(40), pa.int64()),
+        "embedding": pa.array(vecs, pa.list_(pa.float32())),
+    }), tmp_path / "embeddings.parquet")
+    _load(spark, str(tmp_path), "embeddings")  # warm the schema memo
+    spec = build_registry()["semantic_incremental_pairs"]
+    df, jobs = _jobs(spark, lambda: spec.spark_fn(spark, str(tmp_path)))
+    assert len(jobs) == 2, jobs
+    assert df.columns == ["id_a", "id_b", "cosine"]
 
 
 # ---------------------------------------------------------------------------
