@@ -8,8 +8,11 @@ Scale stance (100 TB):
     keys — the shuffle key is the band hash, so only same-bucket
     candidates meet; signatures are fixed-width, documents stay columnar;
   * SimHash is one explode + partial-aggregatable bit vote (60-bit
-    signature), near-dup = Hamming distance on two longs —
-    `bit_count(a ^ b)`;
+    signature).  One quarter-blocked Hamming matcher
+    (`_hamming_matches`) serves the SimHash, image, audio and video
+    tiers, full and incremental: each signature buckets on its four
+    quarters (pigeonhole-exact at Hamming ≤ 3), pairs verify with
+    `bit_count(a ^ b)`, and an id never pairs with itself;
   * n-gram Jaccard verifies candidate pairs exactly (set ops on shingle
     arrays), run only on the LSH-survivor pairs;
   * connected components label every node with the minimum id reachable
@@ -1819,33 +1822,21 @@ def simhash(df: DataFrame, text_col: str = "text",
     return votes.select(id_col, body.alias("simhash60"))
 
 
-def hamming_neardup_pairs(sig: DataFrame, sig_col: str,
-                          id_col: str = "doc_id",
-                          max_hamming: int = 3,
-                          max_bucket: int = 10_000,
-                          quarter_bits: int = 16) -> DataFrame:
-    """Near-dup pairs for ANY precomputed integer signature column
-    (SimHash, perceptual aHash/dHash from ``multimodal.phash_images``,
-    an audio fingerprint, ...) by Hamming distance: blocked on the four
-    ``quarter_bits``-wide slices of the signature (16 for 64-bit
-    signatures, 15 for the 60-bit SimHash), so the join key is
-    a short block, never O(n²).  Pigeonhole: a pair within distance ≤ 3
-    shares at least one identical quarter, so for ``max_hamming <= 3``
-    the blocked join is EXACT (≡ all-pairs + filter); above 3 it is the
-    standard recall-bounded candidate generator (the registered SimHash
-    query runs it at 6).  One shuffle on the block key via
-    ``_bucket_pairs_any`` — (id, signature) structs ride into their
-    quarter buckets and pairs explode in place with both signatures
-    present for the verify, hot buckets chunk-grid.  Returns
-    ``(doc_a, doc_b, hamming)``."""
+def _quarter_blocks(sig: DataFrame, id_col: str, sig_col: str,
+                    quarter_bits: int = 16) -> DataFrame:
+    """The quarter-block rows every Hamming tier buckets on: one
+    ``(x: struct<i, s>, q, blk)`` row per signature quarter, where
+    ``blk`` is the ``quarter_bits``-wide slice ``q`` (16 for 64-bit
+    signatures, 15 for the 60-bit SimHash).  Pigeonhole: a pair within
+    distance ≤ 3 shares at least one identical quarter.
+
+    NULL signatures (quarantined rows, e.g. ``phash_images(on_error=
+    'quarantine')``) never enter a bucket — a NULL block key would
+    group them together.  The shift is unsigned: a 64-bit signature
+    uses bit 63 (sign), and quarter extraction must not sign-extend
+    before masking."""
     qmask = (1 << quarter_bits) - 1
-    # quarantined rows (NULL signature, e.g. phash_images on_error=
-    # 'quarantine') never enter a bucket: a NULL block key would group
-    # quarantined rows together and only die later at the Hamming filter
-    sig = sig.where(F.col(sig_col).isNotNull())
-    # shiftrightunsigned: a 64-bit signature uses bit 63 (sign), and
-    # quarter extraction must not sign-extend before masking
-    blocks = sig.select(
+    return sig.where(F.col(sig_col).isNotNull()).select(
         F.struct(
             F.col(id_col).alias("i"), F.col(sig_col).alias("s")
         ).alias("x"),
@@ -1858,17 +1849,77 @@ def hamming_neardup_pairs(sig: DataFrame, sig_col: str,
             for qi in range(4)
         ])).alias("bq"),
     ).select("x", "bq.q", "bq.blk")
-    cand = (
-        _bucket_pairs_any(blocks, "x", ["q", "blk"], max_bucket)
+
+
+def _hamming_matches(sig: DataFrame, id_col: str, sig_col: str,
+                     max_hamming: int, max_bucket: int,
+                     quarter_bits: int = 16,
+                     store: DataFrame | None = None,
+                     store_shards: int | None = None) -> DataFrame:
+    """The one quarter-blocked Hamming matcher behind every signature
+    tier (SimHash, pHash, audio, video frames), full and incremental.
+
+    ``store_shards=None`` is the full pass over ``sig``: the in-bucket
+    triangle of :func:`_bucket_pairs_any`.  Otherwise ``sig`` is a new
+    batch and ``store`` the settled signatures (``None`` on the first
+    batch): the new×all grid of :func:`_flag_and_shard` +
+    :func:`_incremental_value_pairs`, so only pairs with at least one
+    new member are formed.
+
+    Both engines yield ``(a, b)`` struct pairs; the finish is shared.
+    Each pair is oriented ``doc_a < doc_b`` (struct ordering compares
+    the id first), same-id pairs — two signatures of one object — are
+    dropped, and ``bit_count(a ^ b)`` verifies.  Returns
+    ``(doc_a, doc_b, sig_a, sig_b, hamming)``, not deduplicated: a pair
+    meets once per shared quarter (and, incrementally, per shard), so
+    callers ``distinct()`` after their projection."""
+    def blocks(d: DataFrame) -> DataFrame:
+        return _quarter_blocks(d, id_col, sig_col, quarter_bits)
+
+    if store_shards is None:
+        pairs = _bucket_pairs_any(blocks(sig), "x", ["q", "blk"],
+                                  max_bucket)
+    else:
+        flagged = _flag_and_shard(
+            blocks(sig), None if store is None else blocks(store),
+            F.col("x.i"), store_shards)
+        pairs = _incremental_value_pairs(flagged, "x", ["q", "blk"],
+                                         max_bucket)
+    lo, hi = F.least("a", "b"), F.greatest("a", "b")
+    return (
+        pairs.where(F.col("a.i") != F.col("b.i"))
         .select(
-            F.col("a.i").alias("doc_a"), F.col("b.i").alias("doc_b"),
+            lo["i"].alias("doc_a"), hi["i"].alias("doc_b"),
+            lo["s"].alias("sig_a"), hi["s"].alias("sig_b"),
             F.bit_count(
                 F.col("a.s").bitwiseXOR(F.col("b.s"))
             ).alias("hamming"),
         )
-        .distinct()
+        .where(F.col("hamming") <= int(max_hamming))
     )
-    return cand.filter(F.col("hamming") <= max_hamming)
+
+
+def hamming_neardup_pairs(sig: DataFrame, sig_col: str,
+                          id_col: str = "doc_id",
+                          max_hamming: int = 3,
+                          max_bucket: int = 10_000,
+                          quarter_bits: int = 16) -> DataFrame:
+    """Near-dup pairs for ANY precomputed integer signature column
+    (SimHash, perceptual aHash/dHash from ``multimodal.phash_images``,
+    an audio fingerprint, ...) by Hamming distance, blocked on the four
+    ``quarter_bits``-wide slices of the signature (16 for 64-bit
+    signatures, 15 for the 60-bit SimHash), so the join key is a short
+    block, never O(n²).  For ``max_hamming <= 3`` the blocked pass is
+    EXACT (≡ all-pairs + filter); above 3 it is the standard
+    recall-bounded candidate generator (the registered SimHash query
+    runs it at 6).  One shuffle on the block key, pairs explode in
+    place with both signatures present for the verify, hot buckets
+    chunk-grid — see :func:`_hamming_matches`.  An id carrying several
+    signatures never pairs with itself.  Returns
+    ``(doc_a, doc_b, hamming)``."""
+    return _hamming_matches(
+        sig, id_col, sig_col, max_hamming, max_bucket, quarter_bits
+    ).select("doc_a", "doc_b", "hamming").distinct()
 
 
 def hamming_block_occupancy(sig: DataFrame, sig_col: str,
@@ -1880,22 +1931,13 @@ def hamming_block_occupancy(sig: DataFrame, sig_col: str,
     (in-bucket pair fan-out is quadratic in occupancy, so the tail of
     this histogram is the chunk-grid's workload) and for spotting
     degenerate signature mass (a huge bucket at one hash = a corpus of
-    near-identical objects, or a fixture aliasing bug — exactly how the
-    r12 fixture-design issue in docs/scale.md would have surfaced).
-    Two map-side-combinable groupBys, no pair explosion."""
-    qmask = (1 << quarter_bits) - 1
-    blocks = sig.where(F.col(sig_col).isNotNull()).select(
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(qi).alias("q"),
-                F.shiftrightunsigned(sig_col, qi * quarter_bits)
-                .bitwiseAND(F.lit(qmask)).alias("blk"),
-            )
-            for qi in range(4)
-        ])).alias("bq"),
-    ).select("bq.q", "bq.blk")
-    per_bucket = blocks.groupBy("q", "blk").agg(
-        F.count(F.lit(1)).alias("occupancy"))
+    near-identical objects, or a fixture aliasing bug).  Two
+    map-side-combinable groupBys over the same quarter blocks the pair
+    tiers shuffle, no pair explosion."""
+    per_bucket = (
+        _quarter_blocks(sig, id_col, sig_col, quarter_bits)
+        .groupBy("q", "blk").agg(F.count(F.lit(1)).alias("occupancy"))
+    )
     return per_bucket.groupBy("occupancy").agg(
         F.count(F.lit(1)).alias("n_buckets"))
 
@@ -1946,39 +1988,10 @@ def hamming_incremental_pairs(store_sigs: DataFrame | None,
     media).  Result ≡ ``hamming_neardup_pairs(store ∪ batch)``
     restricted to pairs with at least one new member — new↔old and
     new↔new, never old↔old.  Returns ``(doc_a, doc_b, hamming)``."""
-    def keyed(sig: DataFrame) -> DataFrame:
-        sig = sig.where(F.col(sig_col).isNotNull())  # quarantined rows
-        return sig.select(
-            F.struct(
-                F.col(id_col).alias("i"), F.col(sig_col).alias("s")
-            ).alias("x"),
-            F.explode(F.array(*[
-                F.struct(
-                    F.lit(qi).alias("q"),
-                    F.shiftrightunsigned(sig_col, qi * 16)
-                    .bitwiseAND(F.lit(0xFFFF)).alias("blk"),
-                )
-                for qi in range(4)
-            ])).alias("bq"),
-        ).select("x", "bq.q", "bq.blk")
-
-    flagged = _flag_and_shard(
-        keyed(new_sigs),
-        None if store_sigs is None else keyed(store_sigs),
-        F.col("x.i"), store_shards,
-    )
-    cand = (
-        _incremental_value_pairs(flagged, "x", ["q", "blk"], max_bucket)
-        .select(
-            F.least(F.col("a.i"), F.col("b.i")).alias("doc_a"),
-            F.greatest(F.col("a.i"), F.col("b.i")).alias("doc_b"),
-            F.bit_count(
-                F.col("a.s").bitwiseXOR(F.col("b.s"))
-            ).alias("hamming"),
-        )
-        .distinct()
-    )
-    return cand.filter(F.col("hamming") <= max_hamming)
+    return _hamming_matches(
+        new_sigs, id_col, sig_col, max_hamming, max_bucket,
+        store=store_sigs, store_shards=store_shards,
+    ).select("doc_a", "doc_b", "hamming").distinct()
 
 
 def hamming_incremental_pairs_either(store_sigs: DataFrame | None,
@@ -2022,7 +2035,7 @@ def simhash_neardup_pairs(df: DataFrame, text_col: str = "text",
     15-bit quarters of the 60-bit signature (a pair within distance ≤3
     shares at least one identical quarter — pigeonhole), so the join key
     is a short block, not O(n²)."""
-    # delegate to the generic signature-pair machinery (r12): the text
+    # delegate to the generic signature-pair machinery: the text
     # tier derives its signature, then blocks exactly like the
     # perceptual/audio tiers, on 15-bit rather than 16-bit quarters.
     return hamming_neardup_pairs(

@@ -3241,7 +3241,7 @@ VIDEO_PAIRS_DUCK = _video_pairs_duck(10_000)
 VIDEO_PAIRS_BF_DUCK = _video_pairs_duck(100, black_frame=True)
 
 # capped distinct (doc, fhash) rows — the shared head of the fuzzy /
-# containment oracles, mirroring multimodal._video_capped_hashes
+# containment oracles, mirroring multimodal._video_hashes
 _VIDEO_CAPPED_CTES = """
 vd AS (SELECT DISTINCT doc_id, fhash FROM vsigs),
 vok AS (SELECT fhash FROM vd GROUP BY fhash HAVING COUNT(*) <= {cap}),

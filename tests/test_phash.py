@@ -1465,3 +1465,106 @@ FROM dbit GROUP BY doc_id, f
                     sigs, "sig", "doc_id").collect()}
         assert sum(o * n for o, n in hist.items()) == 4 * len(vals)
         assert hist.get(12, 0) >= 4  # the planted cluster's 4 quarters
+
+
+def _s64(v: int) -> int:
+    """Unsigned 64-bit pattern → the signed long Spark stores."""
+    v &= (1 << 64) - 1
+    return v - (1 << 64) if v >= 1 << 63 else v
+
+
+def _flip(v: int, *bits: int) -> int:
+    return _s64(v ^ sum(1 << b for b in bits))
+
+
+class TestDirtySignatures:
+    """Every Hamming tier runs on one quarter-blocked matcher; this pins
+    it against a Python all-pairs reference on the inputs real stores
+    carry: bit-63 (negative) signatures, NULL signatures, and ids with
+    several signatures (multi-offset audio, per-frame video hashes)."""
+
+    @staticmethod
+    def _rows():
+        rng = np.random.default_rng(23)
+        base = [int(v) for v in rng.integers(
+            -(1 << 63), (1 << 63) - 1, 24, dtype=np.int64)]
+        base[9] = _flip(base[8], 0, 17, 40)     # H = 3: at the gate
+        base[11] = _flip(base[10], 63)          # sign bit only: H = 1
+        base[14] = _flip(base[13], 1, 2, 3, 4)  # H = 4: outside
+        rows = [(i, v) for i, v in enumerate(base)]
+        rows += [
+            (3, _flip(base[7], 5, 63)),   # second signature near id 7
+            (5, _flip(base[5], 9)),       # two signatures of one id
+            (12, _flip(base[12], 63)),    # ... differing in bit 63
+            (20, _flip(base[2], 30)),     # batch id near a store id
+            (21, _flip(base[20], 44)),    # batch↔batch
+            (15, _flip(base[1], 0, 63)),  # batch id near a store id
+            (3, None), (24, None), (25, None),
+        ]
+        assert any(v < 0 for _, v in rows if v is not None)
+        return rows
+
+    @staticmethod
+    def _ref_pairs(rows):
+        out = set()
+        for x, (i, a) in enumerate(rows):
+            for j, b in rows[x + 1:]:
+                if a is None or b is None or i == j:
+                    continue
+                h = _ham(a, b)
+                if h <= 3:
+                    out.add((min(i, j), max(i, j), h))
+        return out
+
+    @staticmethod
+    def _ref_shared(rows):
+        sigs = {}
+        for i, v in rows:
+            if v is not None:
+                sigs.setdefault(i, set()).add(v)
+        out = set()
+        for i in sigs:
+            for j in sigs:
+                if i >= j:
+                    continue
+                ma = {a for a in sigs[i]
+                      if any(_ham(a, b) <= 3 for b in sigs[j])}
+                mb = {b for b in sigs[j]
+                      if any(_ham(a, b) <= 3 for a in sigs[i])}
+                if ma:
+                    out.add((i, j, min(len(ma), len(mb))))
+        return out
+
+    def test_dirty_signatures_match_allpairs_reference(self, spark):
+        rows = self._rows()
+        sigs = spark.createDataFrame(rows, "doc_id LONG, fhash LONG")
+        store, batch = sigs.where("doc_id < 12"), sigs.where("doc_id >= 12")
+
+        def touches_batch(p):
+            return p[0] >= 12 or p[1] >= 12
+
+        want = self._ref_pairs(rows)
+        assert {(8, 9, 3), (10, 11, 1), (3, 7, 2)} <= want
+        assert not any(a == b for a, b, _ in want)
+
+        def triples(df):
+            return {(r.doc_a, r.doc_b, r.hamming) for r in df.collect()}
+
+        assert triples(dd.hamming_neardup_pairs(
+            sigs, "fhash", "doc_id", max_hamming=3)) == want
+        assert triples(dd.hamming_incremental_pairs(
+            None, sigs, "fhash", "doc_id", max_hamming=3)) == want
+        assert triples(dd.hamming_incremental_pairs(
+            store, batch, "fhash", "doc_id", max_hamming=3)) == \
+            {p for p in want if touches_batch(p)}
+
+        shared = self._ref_shared(rows)
+
+        def shares(df):
+            return {(r.doc_a, r.doc_b, r.n_shared) for r in df.collect()}
+
+        assert shares(mm.video_neardup_pairs_fuzzy(
+            sigs, min_shared=1, max_hamming=3, max_hash_df=None)) == shared
+        assert shares(mm.video_incremental_pairs_fuzzy(
+            store, batch, min_shared=1, max_hamming=3,
+            max_hash_df=None)) == {p for p in shared if touches_batch(p)}
