@@ -26,10 +26,13 @@ signature, band key and pair hash-exactly.
 
 from __future__ import annotations
 
+import logging
 import re
 from collections import OrderedDict
 
 from pyspark.sql import DataFrame, functions as F
+
+_log = logging.getLogger(__name__)
 
 # Upper bound on candidate-id rows we will HINT to broadcast in the
 # verify tiers.  4M bigint ids is ~32 MB of data (~100-200 MB as a
@@ -405,23 +408,23 @@ def _data_fingerprint(df: DataFrame):
 
 def _text_stats(th: DataFrame, cache_key: tuple | None) -> tuple[int, int]:
     """(n_docs, n_distinct_texts) for a (id, digest) frame — one
-    shuffle-free scan (partial count + HyperLogLog partials, constant
-    ~64 KB per partition at any corpus size), memoized per logical
-    plan."""
+    shuffle-free scan (partial count + one DataSketches HLL partial per
+    partition, merged once), memoized per logical plan."""
     if cache_key is not None and cache_key in _TEXT_STATS_CACHE:
         _TEXT_STATS_CACHE.move_to_end(cache_key)
         return _TEXT_STATS_CACHE[cache_key]
-    # rsd must sit well under the decision threshold: 0.5 % error vs
-    # the 5 % default keeps the pick stable (a 2 % rsd flipped the
-    # sf0.001 corpus, 2.2 % true dup mass estimated at 5.2 %).  Spark's
-    # HLL++ has no sparse mode — small cardinalities go through the
-    # linear-counting correction, which stays within rsd but is NOT
-    # exact — so the margin, not exactness, is what makes the pick
-    # stable.  The sketch is ~64 KB per partition partial — still
-    # constant-size vs the per-doc exchange this replaces.
+    # The estimate must sit well under the decision threshold (a 2 %
+    # rsd flipped the sf0.001 corpus, 2.2 % true dup mass estimated at
+    # 5.2 %).  The DataSketches HLL at lgK 16 is ~0.4 % rsd in HLL mode
+    # and counts coupons (exact up to hash collisions) while the corpus
+    # is small, so every testdata digest set estimates exactly.  Its
+    # state is ONE binary buffer column; approx_count_distinct at rsd
+    # 0.005 (p = 16) would pack HLL++'s registers into 6,554 long
+    # buffer columns, ~1.5 MB of generated Java regenerated per call.
     n_docs, n_texts = th.agg(
         F.count(F.lit(1)),
-        F.approx_count_distinct("__th", rsd=0.005)).collect()[0]
+        F.expr("hll_sketch_estimate(hll_sketch_agg(__th, 16))")
+    ).collect()[0]
     if cache_key is not None:
         _TEXT_STATS_CACHE[cache_key] = (n_docs, n_texts)
         while len(_TEXT_STATS_CACHE) > _TEXT_STATS_CACHE_MAX:
@@ -439,10 +442,12 @@ def _adaptive_text_collapse(df: DataFrame, text_col: str, id_col: str,
     its extra stages.  The decision itself is ONE scan with a
     partial-aggregated ``count`` + HyperLogLog distinct — no per-doc
     shuffle: at corpus scale the groupBy(digest) exchange this replaces
-    moves one row per document just to produce two numbers, while HLL
-    partials are a few KB per partition regardless of corpus size.
-    The ±0.5 % HLL error only matters within ±0.5 % of the threshold,
-    where either strategy is fine — both are pinned row-identical.  Returns
+    moves one row per document just to produce two numbers, while each
+    partition's HLL partial is one sketch of at most 2^16 one-byte
+    registers (64 KB; far less while a small corpus stays in coupon
+    mode) regardless of corpus size.  The ~0.4 % HLL error only matters within that margin of the
+    threshold, where either strategy is fine — both are pinned
+    row-identical.  Each decision is logged at DEBUG.  Returns
     ``None`` when duplication is light (caller runs its per-pair core
     directly), else ``(th, gstats, repdocs)``: checkpointed doc→digest
     membership, per-distinct-text ``(__th, rep, cnt)``, and the
@@ -469,8 +474,17 @@ def _adaptive_text_collapse(df: DataFrame, text_col: str, id_col: str,
                      text_col, id_col, prefix)
     except Exception:  # pragma: no cover - plan hashing unavailable
         cache_key = None
+    memo_hit = cache_key is not None and cache_key in _TEXT_STATS_CACHE
     n_docs, n_texts = _text_stats(th, cache_key)
-    if not n_docs or (n_docs - n_texts) <= collapse_threshold * n_docs:
+    collapse = (bool(n_docs)
+                and n_docs - n_texts > collapse_threshold * n_docs)
+    decision = {"n_docs": n_docs, "n_texts": n_texts,
+                "threshold": collapse_threshold,
+                "pick": "collapse" if collapse else "bypass",
+                "memo_hit": memo_hit}
+    _log.debug("text collapse decision %s", decision,
+               extra={"dedup_decision": decision})
+    if not collapse:
         return None
     th = th.localCheckpoint()  # id + 32-char digest per doc, no text
     # re-derive the group stats from the CHECKPOINTED digest frame: the
@@ -1867,9 +1881,9 @@ def _hamming_matches(sig: DataFrame, id_col: str, sig_col: str,
     new member are formed.
 
     Both engines yield ``(a, b)`` struct pairs; the finish is shared.
-    Each pair is oriented ``doc_a < doc_b`` (struct ordering compares
-    the id first), same-id pairs — two signatures of one object — are
-    dropped, and ``bit_count(a ^ b)`` verifies.  Returns
+    Same-id pairs — two signatures of one object — are dropped,
+    ``bit_count(a ^ b)`` verifies, and each survivor is oriented
+    ``doc_a < doc_b`` by one id compare.  Returns
     ``(doc_a, doc_b, sig_a, sig_b, hamming)``, not deduplicated: a pair
     meets once per shared quarter (and, incrementally, per shard), so
     callers ``distinct()`` after their projection."""
@@ -1885,17 +1899,26 @@ def _hamming_matches(sig: DataFrame, id_col: str, sig_col: str,
             F.col("x.i"), store_shards)
         pairs = _incremental_value_pairs(flagged, "x", ["q", "blk"],
                                          max_bucket)
-    lo, hi = F.least("a", "b"), F.greatest("a", "b")
+    # ids are distinct past the same-id filter, so one id compare
+    # orients the pair
+    swap = F.col("a.i") > F.col("b.i")
+
+    def lo(f: str):
+        return F.when(swap, F.col(f"b.{f}")).otherwise(F.col(f"a.{f}"))
+
+    def hi(f: str):
+        return F.when(swap, F.col(f"a.{f}")).otherwise(F.col(f"b.{f}"))
+
     return (
         pairs.where(F.col("a.i") != F.col("b.i"))
-        .select(
-            lo["i"].alias("doc_a"), hi["i"].alias("doc_b"),
-            lo["s"].alias("sig_a"), hi["s"].alias("sig_b"),
-            F.bit_count(
-                F.col("a.s").bitwiseXOR(F.col("b.s"))
-            ).alias("hamming"),
-        )
+        .withColumn("hamming",
+                    F.bit_count(F.col("a.s").bitwiseXOR(F.col("b.s"))))
         .where(F.col("hamming") <= int(max_hamming))
+        .select(
+            lo("i").alias("doc_a"), hi("i").alias("doc_b"),
+            lo("s").alias("sig_a"), hi("s").alias("sig_b"),
+            "hamming",
+        )
     )
 
 

@@ -264,11 +264,16 @@ def _sign_cluster_expr(v, W: list[list[int]], bit_offset: int = 0):
     dim = len(W[0])
     zero = F.lit(0).cast("bigint")
     quant = F.lit(float(EMB_QUANT))
+
+    def sql_array(items):
+        # one parsed literal instead of a py4j round trip per element
+        return F.expr(f"array({', '.join(items)})")
+
     # transposed weights: element j's contribution row to all b sums
-    wmat = F.array(*[
-        F.array(*[F.lit(int(W[p][j])) for p in range(b)])
+    wmat = sql_array(
+        f"array({', '.join(str(int(W[p][j])) for p in range(b))})"
         for j in range(dim)
-    ])
+    )
     vq = F.transform(v, lambda x: F.round(x * quant).cast("bigint"))
     sums = F.aggregate(
         # zip pads the SHORTER side with NULL: j beyond dim → wrow NULL
@@ -276,7 +281,7 @@ def _sign_cluster_expr(v, W: list[list[int]], bit_offset: int = 0):
         # beyond len(v) → q NULL → an all-NULL term row.
         F.zip_with(vq, wmat,
                    lambda q, wrow: F.transform(wrow, lambda w: q * w)),
-        F.array(*[zero] * b),
+        sql_array(["0L"] * b),
         # coalesce(term, 0) reproduces SQL SUM's NULL-skipping; a NULL
         # term ROW (vector longer than dim) contributes nothing.
         lambda acc, trow: F.when(trow.isNull(), acc).otherwise(
@@ -289,8 +294,7 @@ def _sign_cluster_expr(v, W: list[list[int]], bit_offset: int = 0):
     code = F.aggregate(
         F.zip_with(
             sums,
-            F.array(*[F.lit(1 << (bit_offset + p)).cast("bigint")
-                      for p in range(b)]),
+            sql_array(f"{1 << (bit_offset + p)}L" for p in range(b)),
             lambda s, w: F.when(s > 0, w).otherwise(zero),
         ),
         zero,

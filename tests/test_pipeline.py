@@ -132,6 +132,58 @@ class TestDedup:
         dedup.clear_text_stats_cache()
         assert len(dedup._TEXT_STATS_CACHE) == 0
 
+    def test_text_stats_exact_at_small_n(self, spark):
+        """2,000 documents over 1,500 distinct digests: the probe's
+        sketch counts coupons at this size, so both numbers are exact."""
+        import random
+
+        rng = random.Random(9)
+        keys = list(range(1500)) + [rng.randrange(1500) for _ in range(500)]
+        th = spark.createDataFrame(
+            [(i, f"t{k}") for i, k in enumerate(keys)],
+            "doc_id long, text string",
+        ).select("doc_id", F.md5("text").alias("__th"))
+        assert dedup._text_stats(th, None) == (2000, 1500)
+
+    def test_collapse_picks_bypass_near_threshold(self, spark, caplog):
+        """The sf0.001 corpus at prefix 400 carries 2.2 % duplicate mass,
+        under the 5 % default: a loose estimate once flipped it to
+        collapse.  The decision is logged as one DEBUG record."""
+        import logging
+
+        dedup.clear_text_stats_cache()
+        corpus = spark.read.parquet(DOCS)
+        with caplog.at_level(logging.DEBUG, logger=dedup.__name__):
+            assert dedup._adaptive_text_collapse(
+                corpus, "text", "doc_id", 400, 0.05) is None
+        [rec] = [r for r in caplog.records
+                 if hasattr(r, "dedup_decision")]
+        assert rec.dedup_decision == {
+            "n_docs": 500, "n_texts": 489, "threshold": 0.05,
+            "pick": "bypass", "memo_hit": False}
+
+    def test_text_stats_plan_has_one_sketch_buffer(self, spark, docs,
+                                                  monkeypatch):
+        """The probe aggregates into one DataSketches buffer column, not
+        HLL++'s per-register ``MS[i]`` long columns (6,554 at rsd
+        0.005, ~1.5 MB of generated Java per call)."""
+        th = docs.select("doc_id", F.md5("text").alias("__th"))
+        plans = []
+        collect = type(th).collect
+
+        def spy(self):
+            rows = collect(self)
+            plans.append(self._jdf.queryExecution().executedPlan()
+                         .toString())
+            return rows
+
+        monkeypatch.setattr(type(th), "collect", spy)
+        dedup._text_stats(th, None)
+        [plan] = plans
+        assert "hll_sketch_agg" in plan
+        assert "approx_count_distinct" not in plan
+        assert "MS[" not in plan
+
     def test_lsh_collapse_keeps_null_text_pairs(self, spark, docs):
         """NULL-text documents pair with each other on the bypass path
         (NULL band keys share one bucket under SQL GROUP BY), so the
