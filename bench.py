@@ -44,8 +44,11 @@ def compact_line(total: float, sf: float, timings: dict[str, float],
     return json.dumps(compact, separators=(",", ":"))
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+def bench_session(app_name: str = "petropandas-spark-bench"):
+    """The bench's host-derived session: ``local[$SPARK_GRAFT_CPUS]``
+    (default: the cores in this process's CPU affinity mask), driver
+    heap an eighth of RAM, 32 MB scan splits.  Returns ``(spark, cpus)``;
+    ``tools/bench_subset.py`` runs its A/Bs on the same session."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS",
                           str(len(os.sched_getaffinity(0))))
     # an eighth of host RAM, 1-8 GiB (as perfbench sizes it): sf0.1
@@ -53,7 +56,6 @@ def main() -> None:
     # full collections as random 30-60 s stalls on single queries
     ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
     driver_mb = max(1024, min(ram_mb // 8, 8192))
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 
     repo = os.path.dirname(os.path.abspath(__file__))
     sys.path.insert(0, repo)
@@ -68,7 +70,7 @@ def main() -> None:
     spark = (
         apply_worker_pool_confs(
             SparkSession.builder.master(f"local[{cpus}]"))
-        .appName("petropandas-spark-bench")
+        .appName(app_name)
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -118,6 +120,13 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    return spark, cpus
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
+    spark, cpus = bench_session()
 
     import __spark_entry__ as e
 

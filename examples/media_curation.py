@@ -99,7 +99,7 @@ def main(sf_dir: str, out: str) -> None:
         .join(survivors, "doc_id", "semi")
     feats = mm.decode_and_featurize(
         mm.resize_images(kept_media, 8, 8).withColumnRenamed(
-            "resized", "content"), target=8)
+            "resized", "content"))
     feats.write.mode("overwrite").parquet(os.path.join(out, "features"))
     print(f"featurized survivors: {feats.count()}")
 

@@ -458,7 +458,7 @@ def _adaptive_text_collapse(df: DataFrame, text_col: str, id_col: str,
     # groups NULL band keys / NULL buckets together (SQL GROUP BY
     # NULL-equality), so NULL-text docs ARE pairwise candidates there —
     # with a NULL digest the null-rejecting equi-joins in
-    # _expand_member_pairs would silently drop those pairs and the
+    # _expand_member_rows would silently drop those pairs and the
     # candidate set would depend on which strategy fired.  The span
     # tier is indifferent (NULL text produces no grams on either path;
     # the sentinel group's extents filter out on length(__t)).
@@ -566,13 +566,6 @@ def _expand_member_rows(rep_rows: DataFrame, th: DataFrame,
     return cross.unionByName(within)
 
 
-def _expand_member_pairs(rep_pairs: DataFrame, th: DataFrame,
-                         gstats: DataFrame, id_col: str) -> DataFrame:
-    """Bare-pair form of :func:`_expand_member_rows` (the LSH candidate
-    tiers)."""
-    return _expand_member_rows(rep_pairs, th, gstats, id_col)
-
-
 def lsh_candidate_pairs_portable(df: DataFrame, text_col: str = "text",
                                  id_col: str = "doc_id",
                                  shingle: int = 5,
@@ -610,7 +603,7 @@ def lsh_candidate_pairs_portable(df: DataFrame, text_col: str = "text",
     if collapsed is None:
         return pairs
     th, gstats, _ = collapsed
-    return _expand_member_pairs(pairs, th, gstats, id_col)
+    return _expand_member_rows(pairs, th, gstats, id_col)
 
 
 def _portable_bands(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:

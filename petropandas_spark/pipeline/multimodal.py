@@ -7,9 +7,7 @@ matching :func:`encode_ppm` and a NumPy nearest-neighbor
 :func:`resize_images`; every other format raises a documented
 ``NotImplementedError`` — plug PIL/libvips in ``decode_image`` and the
 rest of the pipeline (schema, Arrow batching, one-to-many frame
-explode) is unchanged.  A deterministic byte-derived ``_fake_decode``
-exists strictly behind ``decoder='fake'`` for plumbing tests on
-non-image payloads.
+explode) is unchanged.
 
 Schema convention::
 
@@ -74,6 +72,57 @@ def _content_map(df: DataFrame, id_col: str, content_col: str, run,
                 return _consume(_produce(batches))
             return src.mapInPandas(fused, schema=schema)
     return df.select(id_col, content_col).mapInPandas(run, schema=schema)
+
+
+def _fingerprint_stage(df: DataFrame, id_col: str, content_col: str,
+                       on_error: str, cols: list[tuple[str, str]],
+                       rows_of) -> DataFrame:
+    """The one Arrow stage behind every media fingerprint tier: per
+    object, ``rows_of(blob)`` returns the list of its rows, tuples over
+    ``cols`` (``(name, "INT" | "BIGINT")``); output ``(id, *cols)``.
+
+    ``on_error``: ``"raise"`` (default — a corrupt blob fails the job
+    loudly) or ``"quarantine"`` — the JSONL-ingest contract for a
+    production landing stream: an object whose ``rows_of`` raises
+    becomes exactly ONE row (INT columns −1, BIGINT columns NULL, the
+    exception text in ``decode_error``), so the caller splits good/bad
+    with one filter instead of losing the batch to one bad object, and
+    nothing is silently dropped.  An object's rows are all built before
+    any is emitted, so a failure midway never leaks partial rows; the
+    good slice is identical under either mode."""
+    if on_error not in ("raise", "quarantine"):
+        raise ValueError(f"on_error must be 'raise' or 'quarantine', "
+                         f"got {on_error!r}")
+    quarantine = on_error == "quarantine"
+    schema = ", ".join([f"{id_col} BIGINT"] + [f"{c} {t}" for c, t in cols])
+    if quarantine:
+        schema += ", decode_error STRING"
+    bad = tuple(-1 if t == "INT" else None for _, t in cols)
+
+    def run(batches):
+        for pdf in batches:
+            ids, rows, errs = [], [], []
+            for i, blob in zip(pdf[id_col], pdf[content_col]):
+                try:
+                    got = rows_of(bytes(blob) if blob is not None else b"")
+                    err = None
+                except Exception as e:  # noqa: BLE001 — routed, not eaten
+                    if not quarantine:
+                        raise
+                    got, err = [bad], f"{type(e).__name__}: {e}"
+                ids += [i] * len(got)
+                rows += got
+                errs += [err] * len(got)
+            out = {id_col: ids}
+            for k, (c, t) in enumerate(cols):
+                vals = [r[k] for r in rows]
+                out[c] = pd.array(vals, dtype="Int64") if t == "BIGINT" \
+                    else vals
+            if quarantine:
+                out["decode_error"] = errs
+            yield pd.DataFrame(out)
+
+    return _content_map(df, id_col, content_col, run, schema)
 
 
 def attach_media_metadata(df: DataFrame, content_col: str = "content",
@@ -151,23 +200,12 @@ def decode_image(blob: bytes) -> np.ndarray:
     )
 
 
-def _fake_decode(blob: bytes, target: int) -> np.ndarray:
-    """Deterministic fake 'pixels' from the byte content — for exercising
-    the plumbing with non-image payloads (``decoder='fake'``).  Never the
-    default: real decode or a loud NotImplementedError."""
-    digest = hashlib.sha256(blob or b"").digest()
-    rng = np.frombuffer(digest * ((target * target * 3) // 64 + 1), dtype=np.uint8)
-    return rng[: target * target * 3].astype(np.float32) / 255.0
-
-
 def decode_and_featurize(df: DataFrame, content_col: str = "content",
-                         id_col: str = "doc_id", target: int = 8,
-                         decoder: str = "strict") -> DataFrame:
+                         id_col: str = "doc_id") -> DataFrame:
     """mapInPandas decode → fixed-width feature vector (mean/std/histogram).
 
-    ``decoder='strict'`` (default) uses :func:`decode_image` and propagates
-    ``NotImplementedError`` for undecodable payloads; ``decoder='fake'``
-    substitutes the deterministic byte-derived stub (plumbing tests only).
+    Decodes through :func:`decode_image` and propagates
+    ``NotImplementedError`` for undecodable payloads.
 
     Output schema: id, n_bytes, feat array<double> (8 summary features).
     """
@@ -178,10 +216,7 @@ def decode_and_featurize(df: DataFrame, content_col: str = "content",
             ids, sizes, feats = [], [], []
             for i, blob in zip(pdf[id_col], pdf[content_col]):
                 raw = bytes(blob) if blob is not None else b""
-                if decoder == "fake":
-                    px = _fake_decode(raw, target)
-                else:
-                    px = decode_image(raw).ravel()
+                px = decode_image(raw).ravel()
                 hist, _ = np.histogram(px, bins=4, range=(0.0, 1.0))
                 feats.append(
                     [float(px.mean()), float(px.std()),
@@ -276,46 +311,15 @@ def phash_images(df: DataFrame, content_col: str = "content",
     integers.  Pair generation goes through the SimHash Hamming-blocked
     machinery (``dedup.hamming_neardup_pairs``): never all-pairs.
 
-    ``on_error``: ``"raise"`` (default — a corrupt blob fails the job
-    loudly) or ``"quarantine"`` — the JSONL-ingest contract for a
-    production landing stream: undecodable objects keep their row with
-    NULL hashes and the exception text in ``decode_error``, so the
-    caller splits good/bad with one filter instead of losing the batch
-    to one bad object (and nothing is silently dropped).  The good
-    slice's hashes are identical under either mode."""
-    if on_error not in ("raise", "quarantine"):
-        raise ValueError(f"on_error must be 'raise' or 'quarantine', "
-                         f"got {on_error!r}")
-    quarantine = on_error == "quarantine"
-    schema = f"{id_col} BIGINT, ahash BIGINT, dhash BIGINT"
-    if quarantine:
-        schema += ", decode_error STRING"
+    ``on_error='quarantine'`` routes an undecodable image to one
+    NULL-hash row with ``decode_error`` (:func:`_fingerprint_stage`)."""
+    def rows_of(blob):
+        img = decode_image(blob)
+        return [(ahash64(img), dhash64(img))]
 
-    def run(batches):
-        for pdf in batches:
-            ids, ah, dh, errs = [], [], [], []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                ids.append(i)
-                try:
-                    img = decode_image(
-                        bytes(blob) if blob is not None else b"")
-                    ah.append(ahash64(img))
-                    dh.append(dhash64(img))
-                    errs.append(None)
-                except Exception as e:  # noqa: BLE001 — routed, not eaten
-                    if not quarantine:
-                        raise
-                    ah.append(None)
-                    dh.append(None)
-                    errs.append(f"{type(e).__name__}: {e}")
-            out = {id_col: ids,
-                   "ahash": pd.array(ah, dtype="Int64"),
-                   "dhash": pd.array(dh, dtype="Int64")}
-            if quarantine:
-                out["decode_error"] = errs
-            yield pd.DataFrame(out)
-
-    return _content_map(df, id_col, content_col, run, schema)
+    return _fingerprint_stage(df, id_col, content_col, on_error,
+                              [("ahash", "BIGINT"), ("dhash", "BIGINT")],
+                              rows_of)
 
 
 # -- deterministic doc-id-derived fixture images ----------------------------
@@ -527,6 +531,31 @@ def decode_video_frames(blob: bytes) -> list[np.ndarray]:
     return frames
 
 
+def _video_frames(blob: bytes) -> list[np.ndarray]:
+    """:func:`decode_video_frames`, refusing a zero-frame stream (no
+    frame to fingerprint is a decode failure, not an empty result)."""
+    frames = decode_video_frames(blob)
+    if not frames:
+        raise NotImplementedError("zero-frame stream")
+    return frames
+
+
+def _sample_picks(nf: int, n: int) -> list[int]:
+    """Frame indices of the fixed-count temporal sample:
+    ``floor((k+0.5)·nf/n)`` for slot k — the temporal analog of the
+    spatial nearest-neighbor grid."""
+    return [min(int((k + 0.5) * nf / n), nf - 1) for k in range(n)]
+
+
+def _shot_anchors(frames: list[np.ndarray], min_cut: int) -> list[int]:
+    """Hard-cut anchors: frame i iff the 8×8 luminance-grid Σ|Δ| from
+    frame i−1 exceeds ``min_cut``; the middle frame when no cut."""
+    grids = [luma_grid(f, 8, 8) for f in frames]
+    return [i for i in range(1, len(grids))
+            if int(np.abs(grids[i] - grids[i - 1]).sum()) > min_cut] \
+        or [len(frames) // 2]
+
+
 def video_fingerprints(df: DataFrame, content_col: str = "content",
                        id_col: str = "doc_id", n_frames: int = 4,
                        on_error: str = "raise") -> DataFrame:
@@ -538,47 +567,16 @@ def video_fingerprints(df: DataFrame, content_col: str = "content",
     sharing ≥ k frame hashes (:func:`video_neardup_pairs`), the
     shot-level matching a dedup pipeline runs when whole-file hashes
     are defeated by trims and re-muxes.  ``on_error='quarantine'``
-    emits a single NULL-hash row per bad object with ``decode_error``
-    (frame_idx −1), the landing-batch contract."""
-    if on_error not in ("raise", "quarantine"):
-        raise ValueError(f"on_error must be 'raise' or 'quarantine', "
-                         f"got {on_error!r}")
-    quarantine = on_error == "quarantine"
-    schema = f"{id_col} BIGINT, frame_idx INT, fhash BIGINT"
-    if quarantine:
-        schema += ", decode_error STRING"
+    routes a bad object to one NULL-hash row (frame_idx −1) with
+    ``decode_error`` (:func:`_fingerprint_stage`)."""
+    def rows_of(blob):
+        frames = _video_frames(blob)
+        return [(k, dhash64(frames[p]))
+                for k, p in enumerate(_sample_picks(len(frames), n_frames))]
 
-    def run(batches):
-        for pdf in batches:
-            ids, fis, fhs, errs = [], [], [], []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                try:
-                    frames = decode_video_frames(
-                        bytes(blob) if blob is not None else b"")
-                    if not frames:
-                        raise NotImplementedError("zero-frame stream")
-                    nf = len(frames)
-                    picks = [min(int((k + 0.5) * nf / n_frames), nf - 1)
-                             for k in range(n_frames)]
-                    for k, p in enumerate(picks):
-                        ids.append(i)
-                        fis.append(k)
-                        fhs.append(dhash64(frames[p]))
-                        errs.append(None)
-                except Exception as e:  # noqa: BLE001 — routed, not eaten
-                    if not quarantine:
-                        raise
-                    ids.append(i)
-                    fis.append(-1)
-                    fhs.append(None)
-                    errs.append(f"{type(e).__name__}: {e}")
-            out = {id_col: ids, "frame_idx": fis,
-                   "fhash": pd.array(fhs, dtype="Int64")}
-            if quarantine:
-                out["decode_error"] = errs
-            yield pd.DataFrame(out)
-
-    return _content_map(df, id_col, content_col, run, schema)
+    return _fingerprint_stage(df, id_col, content_col, on_error,
+                              [("frame_idx", "INT"), ("fhash", "BIGINT")],
+                              rows_of)
 
 
 def video_fingerprints_shots(df: DataFrame, content_col: str = "content",
@@ -605,49 +603,16 @@ def video_fingerprints_shots(df: DataFrame, content_col: str = "content",
     output ``(id, anchor_idx, fhash)`` rows feed the SAME pair/
     incremental/occupancy machinery as the sampled tier
     (:func:`video_neardup_pairs` et al. take any (id, fhash) rows).
-    ``on_error='quarantine'`` matches :func:`video_fingerprints`."""
-    if on_error not in ("raise", "quarantine"):
-        raise ValueError(f"on_error must be 'raise' or 'quarantine', "
-                         f"got {on_error!r}")
-    quarantine = on_error == "quarantine"
-    schema = f"{id_col} BIGINT, anchor_idx INT, fhash BIGINT"
-    if quarantine:
-        schema += ", decode_error STRING"
+    ``on_error='quarantine'`` as in :func:`_fingerprint_stage`
+    (anchor_idx −1)."""
+    def rows_of(blob):
+        frames = _video_frames(blob)
+        return [(a, dhash64(frames[a]))
+                for a in _shot_anchors(frames, min_cut)]
 
-    def anchors_of(frames: list[np.ndarray]) -> list[int]:
-        grids = [luma_grid(f, 8, 8) for f in frames]
-        out = [i for i in range(1, len(grids))
-               if int(np.abs(grids[i] - grids[i - 1]).sum()) > min_cut]
-        return out or [len(frames) // 2]
-
-    def run(batches):
-        for pdf in batches:
-            ids, ais, fhs, errs = [], [], [], []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                try:
-                    frames = decode_video_frames(
-                        bytes(blob) if blob is not None else b"")
-                    if not frames:
-                        raise NotImplementedError("zero-frame stream")
-                    for a in anchors_of(frames):
-                        ids.append(i)
-                        ais.append(a)
-                        fhs.append(dhash64(frames[a]))
-                        errs.append(None)
-                except Exception as e:  # noqa: BLE001 — routed, not eaten
-                    if not quarantine:
-                        raise
-                    ids.append(i)
-                    ais.append(-1)
-                    fhs.append(None)
-                    errs.append(f"{type(e).__name__}: {e}")
-            out = {id_col: ids, "anchor_idx": ais,
-                   "fhash": pd.array(fhs, dtype="Int64")}
-            if quarantine:
-                out["decode_error"] = errs
-            yield pd.DataFrame(out)
-
-    return _content_map(df, id_col, content_col, run, schema)
+    return _fingerprint_stage(df, id_col, content_col, on_error,
+                              [("anchor_idx", "INT"), ("fhash", "BIGINT")],
+                              rows_of)
 
 
 #: stop-hash document-frequency cap for the video pair tiers: a frame
@@ -927,65 +892,20 @@ def video_union_fingerprints(df: DataFrame, content_col: str = "content",
     container is parsed and the frames hashed ONCE — running the two
     derivations as separate stages would double the decode, the only
     expensive part.  Pairs via :func:`video_neardup_pairs_union`;
-    ``on_error='quarantine'`` emits one NULL-hash row per bad object
-    (tier −1), the landing-batch contract."""
-    if on_error not in ("raise", "quarantine"):
-        raise ValueError(f"on_error must be 'raise' or 'quarantine', "
-                         f"got {on_error!r}")
-    quarantine = on_error == "quarantine"
-    schema = f"{id_col} BIGINT, tier INT, idx INT, fhash BIGINT"
-    if quarantine:
-        schema += ", decode_error STRING"
+    ``on_error='quarantine'`` as in :func:`_fingerprint_stage`
+    (tier and idx −1)."""
+    def rows_of(blob):
+        frames = _video_frames(blob)
+        picks = _sample_picks(len(frames), n_frames)
+        anchors = _shot_anchors(frames, min_cut)
+        fh = {p: dhash64(frames[p]) for p in {*picks, *anchors}}
+        return ([(0, k, fh[p]) for k, p in enumerate(picks)]
+                + [(1, a, fh[a]) for a in anchors])
 
-    def run(batches):
-        for pdf in batches:
-            ids, tiers, idxs, fhs, errs = [], [], [], [], []
-
-            def emit(i, tier, idx, fh):
-                ids.append(i)
-                tiers.append(tier)
-                idxs.append(idx)
-                fhs.append(fh)
-                errs.append(None)
-
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                try:
-                    frames = decode_video_frames(
-                        bytes(blob) if blob is not None else b"")
-                    if not frames:
-                        raise NotImplementedError("zero-frame stream")
-                    nf = len(frames)
-                    hashes = {}  # frame index → dHash, computed once
-
-                    def fh_of(p, frames=frames, hashes=hashes):
-                        if p not in hashes:
-                            hashes[p] = dhash64(frames[p])
-                        return hashes[p]
-
-                    for k in range(n_frames):
-                        p = min(int((k + 0.5) * nf / n_frames), nf - 1)
-                        emit(i, 0, k, fh_of(p))
-                    grids = [luma_grid(f, 8, 8) for f in frames]
-                    anchors = [a for a in range(1, nf)
-                               if int(np.abs(grids[a] - grids[a - 1])
-                                      .sum()) > min_cut] or [nf // 2]
-                    for a in anchors:
-                        emit(i, 1, a, fh_of(a))
-                except Exception as e:  # noqa: BLE001 — routed, not eaten
-                    if not quarantine:
-                        raise
-                    ids.append(i)
-                    tiers.append(-1)
-                    idxs.append(-1)
-                    fhs.append(None)
-                    errs.append(f"{type(e).__name__}: {e}")
-            out = {id_col: ids, "tier": tiers, "idx": idxs,
-                   "fhash": pd.array(fhs, dtype="Int64")}
-            if quarantine:
-                out["decode_error"] = errs
-            yield pd.DataFrame(out)
-
-    return _content_map(df, id_col, content_col, run, schema)
+    return _fingerprint_stage(df, id_col, content_col, on_error,
+                              [("tier", "INT"), ("idx", "INT"),
+                               ("fhash", "BIGINT")],
+                              rows_of)
 
 
 def _per_tier_union(gate) -> DataFrame:
@@ -1332,38 +1252,13 @@ def audio_fingerprints(df: DataFrame, content_col: str = "content",
     :func:`audio_fingerprint64`), the audio twin of
     :func:`phash_images`: 8 bytes per clip, near-dup pairs via
     ``dedup.hamming_neardup_pairs``.  ``on_error='quarantine'`` routes
-    undecodable clips to a NULL-fingerprint row with the error text in
-    ``decode_error`` — the same landing-batch contract as the image
-    path."""
-    if on_error not in ("raise", "quarantine"):
-        raise ValueError(f"on_error must be 'raise' or 'quarantine', "
-                         f"got {on_error!r}")
-    quarantine = on_error == "quarantine"
-    schema = f"{id_col} BIGINT, afp BIGINT"
-    if quarantine:
-        schema += ", decode_error STRING"
+    an undecodable clip to one NULL-fingerprint row with
+    ``decode_error`` (:func:`_fingerprint_stage`)."""
+    def rows_of(blob):
+        return [(audio_fingerprint64(decode_audio(blob)[0]),)]
 
-    def run(batches):
-        for pdf in batches:
-            ids, fps, errs = [], [], []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                ids.append(i)
-                try:
-                    x, _rate = decode_audio(
-                        bytes(blob) if blob is not None else b"")
-                    fps.append(audio_fingerprint64(x))
-                    errs.append(None)
-                except Exception as e:  # noqa: BLE001 — routed, not eaten
-                    if not quarantine:
-                        raise
-                    fps.append(None)
-                    errs.append(f"{type(e).__name__}: {e}")
-            out = {id_col: ids, "afp": pd.array(fps, dtype="Int64")}
-            if quarantine:
-                out["decode_error"] = errs
-            yield pd.DataFrame(out)
-
-    return _content_map(df, id_col, content_col, run, schema)
+    return _fingerprint_stage(df, id_col, content_col, on_error,
+                              [("afp", "BIGINT")], rows_of)
 
 
 def audio_fingerprints_offsets(df: DataFrame,
@@ -1381,42 +1276,18 @@ def audio_fingerprints_offsets(df: DataFrame,
     means a trimmed twin meets the stored offset nearest its cut point
     — the Haitsma-Kalker overlapping-window idea, paid as
     ``len(offsets)`` 8-byte columns instead of an FFT.  Pairs via
-    :func:`audio_neardup_pairs_multioffset`."""
-    if on_error not in ("raise", "quarantine"):
-        raise ValueError(f"on_error must be 'raise' or 'quarantine', "
-                         f"got {on_error!r}")
-    quarantine = on_error == "quarantine"
+    :func:`audio_neardup_pairs_multioffset`; ``on_error='quarantine'``
+    as in :func:`_fingerprint_stage` (off_idx −1)."""
     offs = [float(o) for o in offsets]
-    schema = f"{id_col} BIGINT, off_idx INT, afp BIGINT"
-    if quarantine:
-        schema += ", decode_error STRING"
 
-    def run(batches):
-        for pdf in batches:
-            ids, ois, fps, errs = [], [], [], []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                try:
-                    x, _rate = decode_audio(
-                        bytes(blob) if blob is not None else b"")
-                    for oi, off in enumerate(offs):
-                        ids.append(i)
-                        ois.append(oi)
-                        fps.append(audio_fingerprint64(x, off))
-                        errs.append(None)
-                except Exception as e:  # noqa: BLE001 — routed, not eaten
-                    if not quarantine:
-                        raise
-                    ids.append(i)
-                    ois.append(-1)
-                    fps.append(None)
-                    errs.append(f"{type(e).__name__}: {e}")
-            out = {id_col: ids, "off_idx": ois,
-                   "afp": pd.array(fps, dtype="Int64")}
-            if quarantine:
-                out["decode_error"] = errs
-            yield pd.DataFrame(out)
+    def rows_of(blob):
+        x, _rate = decode_audio(blob)
+        return [(oi, audio_fingerprint64(x, off))
+                for oi, off in enumerate(offs)]
 
-    return _content_map(df, id_col, content_col, run, schema)
+    return _fingerprint_stage(df, id_col, content_col, on_error,
+                              [("off_idx", "INT"), ("afp", "BIGINT")],
+                              rows_of)
 
 
 def audio_neardup_pairs_multioffset(fps: DataFrame,
@@ -1457,44 +1328,20 @@ def audio_fingerprints_windows(df: DataFrame,
     with the track's corresponding windows.  Pairs via
     :func:`audio_containment_pairs` (asymmetric fraction-matched gate);
     a clip shorter than one window emits no rows (nothing to contain);
-    ``on_error='quarantine'`` emits one NULL row (win_idx −1)."""
-    if on_error not in ("raise", "quarantine"):
-        raise ValueError(f"on_error must be 'raise' or 'quarantine', "
-                         f"got {on_error!r}")
-    quarantine = on_error == "quarantine"
+    ``on_error='quarantine'`` as in :func:`_fingerprint_stage`
+    (win_idx −1)."""
     w = int(window_samples)
     if w <= 0:
         raise ValueError(f"window_samples must be positive, got {w}")
-    schema = f"{id_col} BIGINT, win_idx INT, afp BIGINT"
-    if quarantine:
-        schema += ", decode_error STRING"
 
-    def run(batches):
-        for pdf in batches:
-            ids, wis, fps, errs = [], [], [], []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                try:
-                    x, _rate = decode_audio(
-                        bytes(blob) if blob is not None else b"")
-                    for k in range(len(x) // w):
-                        ids.append(i)
-                        wis.append(k)
-                        fps.append(audio_fingerprint64(x[k * w:(k + 1) * w]))
-                        errs.append(None)
-                except Exception as e:  # noqa: BLE001 — routed, not eaten
-                    if not quarantine:
-                        raise
-                    ids.append(i)
-                    wis.append(-1)
-                    fps.append(None)
-                    errs.append(f"{type(e).__name__}: {e}")
-            out = {id_col: ids, "win_idx": wis,
-                   "afp": pd.array(fps, dtype="Int64")}
-            if quarantine:
-                out["decode_error"] = errs
-            yield pd.DataFrame(out)
+    def rows_of(blob):
+        x, _rate = decode_audio(blob)
+        return [(k, audio_fingerprint64(x[k * w:(k + 1) * w]))
+                for k in range(len(x) // w)]
 
-    return _content_map(df, id_col, content_col, run, schema)
+    return _fingerprint_stage(df, id_col, content_col, on_error,
+                              [("win_idx", "INT"), ("afp", "BIGINT")],
+                              rows_of)
 
 
 def audio_fingerprints_onsets(df: DataFrame,
@@ -1539,18 +1386,12 @@ def audio_fingerprints_onsets(df: DataFrame,
     Output ``(id, anchor_idx, afp)`` rows —
     anchor_idx is the refined sample position — feed the SAME
     containment machinery (:func:`audio_containment_pairs` takes any
-    (id, afp) rows); ``on_error='quarantine'`` as everywhere."""
-    if on_error not in ("raise", "quarantine"):
-        raise ValueError(f"on_error must be 'raise' or 'quarantine', "
-                         f"got {on_error!r}")
-    quarantine = on_error == "quarantine"
+    (id, afp) rows); ``on_error='quarantine'`` as in
+    :func:`_fingerprint_stage` (anchor_idx −1)."""
     w, fr = int(window_samples), int(frame_samples)
     if w <= 0 or fr <= 0:
         raise ValueError("window_samples and frame_samples must be "
                          "positive")
-    schema = f"{id_col} BIGINT, anchor_idx INT, afp BIGINT"
-    if quarantine:
-        schema += ", decode_error STRING"
 
     def anchors_of(s: np.ndarray) -> list[int]:
         """SAMPLE positions of the refined onset anchors."""
@@ -1574,47 +1415,23 @@ def audio_fingerprints_onsets(df: DataFrame,
             out.append(lo2 + int(np.abs(s[lo2:hi2]).argmax()))
         return sorted(set(out)) or [max(0, (len(s) - w) // 2)]
 
-    def run(batches):
-        for pdf in batches:
-            ids, ais, fps, errs = [], [], [], []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                try:
-                    x, _rate = decode_audio(
-                        bytes(blob) if blob is not None else b"")
-                    s = np.rint(
-                        (x if x.ndim == 1 else x.sum(axis=1))
-                        * 32768.0).astype(np.int64)
-                    if len(s) < w:
-                        continue
-                    pos_ok = [p_ for p_ in anchors_of(s)
-                              if p_ + w <= len(s)]
-                    # overrunning anchors are DROPPED, not clamped: a
-                    # flush-end window's start depends on the clip's
-                    # length, not its content, so it can never match
-                    # the track's window for the same onset — a clamped
-                    # row would just dilute the containment fraction
-                    if not pos_ok:
-                        pos_ok = [max(0, (len(s) - w) // 2)]
-                    for pos in pos_ok:
-                        ids.append(i)
-                        ais.append(pos)
-                        fps.append(audio_fingerprint64(
-                            x[pos:pos + w]))
-                        errs.append(None)
-                except Exception as e:  # noqa: BLE001 — routed, not eaten
-                    if not quarantine:
-                        raise
-                    ids.append(i)
-                    ais.append(-1)
-                    fps.append(None)
-                    errs.append(f"{type(e).__name__}: {e}")
-            out = {id_col: ids, "anchor_idx": ais,
-                   "afp": pd.array(fps, dtype="Int64")}
-            if quarantine:
-                out["decode_error"] = errs
-            yield pd.DataFrame(out)
+    def rows_of(blob):
+        x, _rate = decode_audio(blob)
+        s = np.rint((x if x.ndim == 1 else x.sum(axis=1))
+                    * 32768.0).astype(np.int64)
+        if len(s) < w:
+            return []
+        # overrunning anchors are DROPPED, not clamped: a flush-end
+        # window's start depends on the clip's length, not its content,
+        # so it can never match the track's window for the same onset —
+        # a clamped row would just dilute the containment fraction
+        pos_ok = [p for p in anchors_of(s) if p + w <= len(s)] \
+            or [max(0, (len(s) - w) // 2)]
+        return [(p, audio_fingerprint64(x[p:p + w])) for p in pos_ok]
 
-    return _content_map(df, id_col, content_col, run, schema)
+    return _fingerprint_stage(df, id_col, content_col, on_error,
+                              [("anchor_idx", "INT"), ("afp", "BIGINT")],
+                              rows_of)
 
 
 def audio_containment_pairs(fps: DataFrame, id_col: str = "doc_id",

@@ -95,10 +95,13 @@ def test_session_helper_pins_worker_pool_confs():
         os.path.abspath(ps_session.__file__)))
     assert repo in os.environ.get("PYTHONPATH", "").split(os.pathsep)
 
-    # bench.py (and the subset bench) consume the helper, not raw confs
+    # bench.py consumes the helper, not raw confs; the subset bench
+    # builds its session through bench.bench_session
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    for rel in ("bench.py", os.path.join("tools", "bench_subset.py")):
+    for rel, uses in (("bench.py", "apply_worker_pool_confs"),
+                      (os.path.join("tools", "bench_subset.py"),
+                       "bench_session")):
         with open(os.path.join(root, rel)) as fh:
             src = fh.read()
-        assert "apply_worker_pool_confs" in src, rel
+        assert uses in src, rel
         assert "unix.domain.socket" not in src, rel

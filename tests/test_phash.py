@@ -899,6 +899,25 @@ class TestVideoTier:
         with pytest.raises(Exception):
             mm.video_fingerprints(df).collect()
 
+        # a valid first frame then a 0×0 frame: the stream parses, and
+        # dhash64 raises mid-object — the object is still ONE
+        # quarantine row, never partial hashes next to it
+        midway = mm.encode_ppm(_rand_img(9, n=8)) + b"P6\n0 0\n255\n"
+        df2 = spark.createDataFrame(
+            [(0, bytearray(good)), (2, bytearray(midway))],
+            "doc_id LONG, content BINARY",
+        )
+        for fn, idx in ((mm.video_fingerprints, "frame_idx"),
+                        (mm.video_union_fingerprints, "idx")):
+            rows = fn(df2, on_error="quarantine").collect()
+            bad_rows = [r for r in rows if r["doc_id"] == 2]
+            assert len(bad_rows) == 1, fn.__name__
+            assert bad_rows[0]["fhash"] is None
+            assert bad_rows[0][idx] == -1
+            assert "IndexError" in bad_rows[0]["decode_error"]
+            assert all(r["decode_error"] is None
+                       for r in rows if r["doc_id"] == 0)
+
     def test_video_incremental_equals_full_on_batch_slice(self, spark):
         docs = spark.range(0, 24).selectExpr("id AS doc_id")
         sigs = mm.video_fingerprints(

@@ -1644,18 +1644,6 @@ class TestMultimodal:
         again = multimodal.decode_and_featurize(df).toPandas().set_index("doc_id")
         assert list(out.loc[1, "feat"]) == list(again.loc[1, "feat"])
 
-    def test_decode_and_featurize_fake_plumbing(self, spark):
-        pdf = pd.DataFrame({
-            "doc_id": [1, 2],
-            "content": [b"\x00\x01\x02fakeimagebytes", b""],
-        })
-        df = multimodal.attach_media_metadata(spark.createDataFrame(pdf))
-        out = multimodal.decode_and_featurize(
-            df, decoder="fake"
-        ).toPandas().set_index("doc_id")
-        assert out.loc[1, "n_bytes"] == 17
-        assert len(out.loc[1, "feat"]) == 8
-
     def test_resize_images_roundtrip(self, spark):
         import numpy as np
 

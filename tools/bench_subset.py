@@ -1,7 +1,7 @@
 """Targeted per-query bench for code-boundary A/Bs (BASELINE.md discipline).
 
 Runs ONLY the named registry queries, min-over-interleaved-reps (same
-estimator as bench.py), and prints one JSON line.  Use it to A/B two
+estimator and session as bench.py), and prints one JSON line.  Use it to A/B two
 adjacent commits on the queries a change touches, in the same host
 window, instead of comparing whole-round totals across windows::
 
@@ -23,34 +23,14 @@ def main() -> int:
         print("usage: bench_subset.py <query> [query ...]", file=sys.stderr)
         return 2
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
 
-    # same worker-pool session shape as bench.py — the engine helper
-    # applies the UDS + preload-daemon configs and the PYTHONPATH the
-    # JVM-spawned daemon needs (petropandas_spark/session.py)
+    # the same host-derived session as the whole-registry bench
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, repo)
+    from bench import bench_session
 
-    from pyspark.sql import SparkSession
-
-    from petropandas_spark.session import apply_worker_pool_confs
-
-    spark = (
-        apply_worker_pool_confs(
-            SparkSession.builder.master(f"local[{cpus}]"))
-        .appName("petropandas-spark-bench-subset")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing",
-        )
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark, _cpus = bench_session("petropandas-spark-bench-subset")
 
     import __spark_entry__ as e
 
